@@ -75,7 +75,7 @@ object SparkConfs {
     * session (pqModel's thread-pooled subspace trainings each gate
     * themselves) can never re-save an already-flipped value and strand
     * the session. */
-  private def scopedConfs[A](spark: org.apache.spark.sql.SparkSession,
+  private[graft] def scopedConfs[A](spark: org.apache.spark.sql.SparkSession,
                              tag: String, overrides: Map[String, String])
                             (body: => A): A = {
     val key = (spark, tag)
@@ -89,21 +89,34 @@ object SparkConfs {
         else (new java.util.concurrent.atomic.AtomicInteger(0),
           Array[Map[String, String]](null))
       if (st._1.getAndIncrement() == 0) {
-        st._2(0) = overrides.map { case (k, _) =>
+        val saved = overrides.map { case (k, _) =>
           k -> spark.conf.get(k, null) }
-        overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+        // all-or-nothing: if a set throws, put back the ones that
+        // landed and undo the depth before the caller sees the error
+        var landed = Set.empty[String]
+        try overrides.foreach { case (k, v) =>
+          spark.conf.set(k, v); landed += k }
+        catch { case e: Throwable =>
+          restore(spark, saved.filter(kv => landed(kv._1)))
+          st._1.decrementAndGet()
+          throw e
+        }
+        st._2(0) = saved
       }
       st
     })
     try body finally confScopes.compute(key, (_, st) => {
       if (st._1.decrementAndGet() == 0) {
-        st._2(0).foreach {
-          case (k, null) => spark.conf.unset(k)
-          case (k, v) => spark.conf.set(k, v)
-        }
+        restore(spark, st._2(0))
         null // evict: depth is 0, nothing left to restore
       } else st
     })
+  }
+
+  private def restore(spark: org.apache.spark.sql.SparkSession,
+                      saved: Map[String, String]): Unit = saved.foreach {
+    case (k, null) => spark.conf.unset(k)
+    case (k, v) => spark.conf.set(k, v)
   }
 
   def maybeInterpreted[A](spark: org.apache.spark.sql.SparkSession,
@@ -132,7 +145,11 @@ object SparkConfs {
     * the 20M-row bound here; a 19M-row ranks table is hundreds of MB
     * force-broadcast per iteration where AQE's byte-based conversion
     * would have declined). Callers gate their `bc()` hints on the
-    * same constant so hint and conf scope always agree. */
+    * same constant, but not always on the same row count as this
+    * scope (the hint on the broadcast side's rows, the scope on the
+    * per-round work), so the invariant is one-way: scope on implies
+    * hint on, while a hint may engage alone — with AQE still on —
+    * when the broadcast side is small and the round work is not. */
   def maybeSmallLoop[A](spark: org.apache.spark.sql.SparkSession,
                         rows: Long)(body: => A): A =
     if (rows < 0 || rows >= SmallLoopRows) body

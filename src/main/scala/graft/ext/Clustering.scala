@@ -75,8 +75,10 @@ object Clustering {
     * / [[graft.ext.Similarity.knnClassify]] / [[graft.ext.Similarity
     * .mutualKnnClusters]]; the floor of 4 keeps test-scale corpora on
     * the constants their oracles pin. */
-  def autoCells(emb: DataFrame): Int =
-    math.max(4L, math.sqrt(emb.count() / 32.0).toLong).toInt
+  def autoCells(emb: DataFrame): Int = autoCells(emb.count())
+
+  /** [[autoCells]] from an already-known corpus row count. */
+  def autoCells(n: Long): Int = math.max(4L, math.sqrt(n / 32.0).toLong).toInt
 
   /** [[kmeans]] exposing its MODEL too: returns (assignment,
     * centroids) where centroids (cluster, dim, cq) are exactly the

@@ -835,11 +835,19 @@ object Dedup {
   /** Embedding-cosine near-duplicates: exact all-pairs scoring with
     * the native cosine kernel. This is the EXACTNESS baseline — at
     * corpus scale use [[Similarity.lshTopK]]'s bucketed candidates
-    * instead of the quadratic pair space. */
+    * instead of the quadratic pair space.
+    *
+    * The streamed side is spread over `defaultParallelism` partitions
+    * first: an embeddings table that arrives as one file split would
+    * otherwise run the whole O(n²) pair sweep as ONE task. One O(n)
+    * round-robin shuffle buys every core; each pair's cosine is the
+    * same expression over the same two vectors, so the answer is
+    * unchanged. */
   def embeddingNearDup(emb: DataFrame, threshold: Double,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
     val left = emb.select(col(idCol).as("a"), col(vecCol).as("va"))
+      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
     val right = emb.select(col(idCol).as("b"), col(vecCol).as("vb"))
     left.join(right, col("a") < col("b"))
       .withColumn("cosine", Similarity.cosine(col("va"), col("vb")))

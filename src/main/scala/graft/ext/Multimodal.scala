@@ -485,13 +485,8 @@ object Multimodal {
           pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
           i += 1
         }
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        Row(mediaId, "audio", bos.toByteArray, "audio/wav", null, null,
-          nSamples.toLong * 1000L / sampleRate)
+        Row(mediaId, "audio", Sound.wav(fmt, pcm, nSamples), "audio/wav",
+          null, null, nSamples.toLong * 1000L / sampleRate)
       }
     }
     spark.createDataFrame(rdd, mediaSchema)
@@ -525,13 +520,8 @@ object Multimodal {
           enc(i) = ((id * 31 + i.toLong * 7) % 256L).toByte
           i += 1
         }
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(enc), fmt, nSamples.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        Row(id, "audio", bos.toByteArray, "audio/basic", null, null,
-          nSamples.toLong * 1000L / sampleRate)
+        Row(id, "audio", Sound.wav(fmt, enc, nSamples), "audio/basic",
+          null, null, nSamples.toLong * 1000L / sampleRate)
       }
     }
     spark.createDataFrame(rdd, mediaSchema)
@@ -598,6 +588,123 @@ object Multimodal {
     spark.createDataFrame(rdd, mediaSchema)
   }
 
+  /** `javax.sound.sampled` dispatch over providers resolved ONCE per
+    * JVM. Each `AudioSystem` call re-resolves its providers with a
+    * classpath `ServiceLoader` scan under the JDK's `synchronized`
+    * `JDK13Services.getProviders` (so decode tasks queue on one lock),
+    * and its reader loop runs the MIDI reader, which scans again, on
+    * every payload. Here the same lookup (`ServiceLoader` over the
+    * context loader, each provider prepended) runs once and the same
+    * first-provider-that-accepts loops pick from it, so every payload
+    * reaches the same JDK reader, codec and writer — except that the
+    * MIDI reader only sees payloads opening with the Standard MIDI File
+    * magic `MThd`, the only ones it does not reject as unsupported. The
+    * JDK's sound providers are stateless, so tasks share them. */
+  private object Sound {
+    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream,
+      UnsupportedAudioFileException}
+    import javax.sound.sampled.spi.{AudioFileReader, AudioFileWriter,
+      FormatConversionProvider}
+
+    private def providers[T](c: Class[T]): List[T] = {
+      val it = java.util.ServiceLoader.load(c).iterator()
+      var out = List.empty[T]
+      while (it.hasNext)
+        try out = it.next() :: out
+        catch { case _: java.util.ServiceConfigurationError => } // skipped
+      out
+    }
+    private val readers = providers(classOf[AudioFileReader])
+    private val sampledReaders = readers.filterNot(
+      _.getClass.getName == "com.sun.media.sound.SoftMidiAudioFileReader")
+    private val writers = providers(classOf[AudioFileWriter])
+    private val codecs = providers(classOf[FormatConversionProvider])
+
+    /** `AudioSystem`'s dispatch loop: the first provider whose
+      * `attempt` does not throw a `rejected`, else `none`. */
+    private def first[P, A](ps: List[P], rejected: Class[_ <: Exception],
+                            none: => Exception)(attempt: P => A): A =
+      ps.iterator.flatMap(p => try Some(attempt(p)) catch {
+        case e: Exception if rejected.isInstance(e) => None
+      }).nextOption().getOrElse(throw none)
+
+    /** The payload's source format and its samples decoded to 16-bit
+      * signed PCM (`AudioSystem.getAudioInputStream` on the bytes, then
+      * on the 16-bit little-endian target unless already there). */
+    def pcm16(payload: Array[Byte]): (AudioFormat, Array[Int]) = {
+      val in = new java.io.ByteArrayInputStream(payload)
+      val midi = payload.length >= 4 && payload(0) == 'M' &&
+        payload(1) == 'T' && payload(2) == 'h' && payload(3) == 'd'
+      val ais = first(if (midi) readers else sampledReaders,
+        classOf[UnsupportedAudioFileException],
+        new UnsupportedAudioFileException("Stream of unsupported format"))(
+        _.getAudioInputStream(in))
+      val f = ais.getFormat
+      val target = new AudioFormat(f.getSampleRate, 16, f.getChannels,
+        true, false)
+      val pcm =
+        if (f.getSampleSizeInBits == 16 && !f.isBigEndian &&
+          f.getEncoding == AudioFormat.Encoding.PCM_SIGNED) ais
+        else codecs.find(_.isConversionSupported(target, f))
+          .getOrElse(throw new IllegalArgumentException(
+            s"Unsupported conversion: $target from $f"))
+          .getAudioInputStream(target, ais)
+      val b = pcm.readAllBytes()
+      (f, Array.tabulate(b.length / 2)(i =>
+        ((b(2 * i) & 0xff) | (b(2 * i + 1).toInt << 8)).toShort.toInt))
+    }
+
+    /** `AudioSystem.write(stream, WAVE, out)` of `frames` frames of
+      * `data` in `fmt`. */
+    def wav(fmt: AudioFormat, data: Array[Byte], frames: Long): Array[Byte] = {
+      val ais = new AudioInputStream(
+        new java.io.ByteArrayInputStream(data), fmt, frames)
+      val out = new java.io.ByteArrayOutputStream()
+      first(writers, classOf[IllegalArgumentException],
+        new IllegalArgumentException("no WAVE writer for " + fmt))(
+        _.write(ais, AudioFileFormat.Type.WAVE, out))
+      out.toByteArray
+    }
+
+    /** Σ|pcm16| over `windows` equal sample windows of a non-empty
+      * clip. */
+    def windowEnergy(s: Array[Int], windows: Int): Array[Long] = {
+      if (s.isEmpty) throw new java.io.IOException("empty clip")
+      val energy = new Array[Long](windows)
+      var i = 0
+      while (i < s.length) {
+        energy(math.min(i.toLong * windows / s.length, windows - 1L).toInt) +=
+          math.abs(s(i))
+        i += 1
+      }
+      energy
+    }
+
+    /** (media_id, decode_ok, `features`…) per clip, the features
+      * computed by `f` over [[pcm16]]. Null or undecodable payloads
+      * give decode_ok = false and null features instead of failing the
+      * batch (NonFatal: sound-file parsers throw unchecked exceptions
+      * on malformed headers too). */
+    def mapClips(media: DataFrame, features: StructType)
+                (f: (AudioFormat, Array[Int]) => Seq[Any]): DataFrame = {
+      val schema = StructType(
+        StructField("media_id", LongType, nullable = false) +:
+          StructField("decode_ok", BooleanType, nullable = false) +:
+          features.fields.toSeq)
+      val failed = Seq.fill(features.length)(null)
+      val rdd = media.select("media_id", "payload").rdd.map { r =>
+        val got =
+          if (r.isNullAt(1)) None
+          else try {
+            val (fmt, s) = pcm16(r.getAs[Array[Byte]](1))
+            Some(f(fmt, s))
+          } catch { case scala.util.control.NonFatal(_) => None }
+        Row.fromSeq(Seq(r.getLong(0), got.isDefined) ++ got.getOrElse(failed))
+      }
+      media.sparkSession.createDataFrame(rdd, schema)
+    }
+  }
+
   /** REAL audio decode + feature extraction via `javax.sound.sampled`
     * (pure JDK — WAV/AIFF/AU containers, PCM + a-law/µ-law codecs):
     * payload to (sample_rate, channels, n_samples, amplitude sum and
@@ -607,57 +714,20 @@ object Multimodal {
     * (sample + 32768) % dim — exact integers, engine-re-derivable for
     * synthesized payloads (the x39 oracle), bit-stable across JVMs.
     * Undecodable or null payloads yield decode_ok = false rather than
-    * failing the batch — the same poison-row guarantee (and the same
-    * NonFatal breadth: sound-file parsers throw unchecked exceptions
-    * on malformed headers too) as [[decodeImage]]. */
-  def decodeAudio(media: DataFrame, dim: Int = 16): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("decode_ok", BooleanType, nullable = false),
+    * failing the batch. */
+  def decodeAudio(media: DataFrame, dim: Int = 16): DataFrame =
+    Sound.mapClips(media, StructType(Seq(
       StructField("sample_rate", IntegerType, nullable = true),
       StructField("channels", IntegerType, nullable = true),
       StructField("n_samples", LongType, nullable = true),
       StructField("sum_q", LongType, nullable = true),
       StructField("hist", ArrayType(LongType, containsNull = false),
-        nullable = true)))
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val decoded: Option[Row] =
-          if (r.isNullAt(1)) None
-          else try {
-            val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-            val f = ais.getFormat
-            val target = new javax.sound.sampled.AudioFormat(
-              f.getSampleRate, 16, f.getChannels, true, false)
-            val pcm16 =
-              if (f.getSampleSizeInBits == 16 && !f.isBigEndian &&
-                f.getEncoding ==
-                  javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) ais
-              else javax.sound.sampled.AudioSystem
-                .getAudioInputStream(target, ais)
-            val bytes = pcm16.readAllBytes()
-            val n = bytes.length / 2
-            val hist = new Array[Long](dim)
-            var sum = 0L
-            var i = 0
-            while (i < n) {
-              val v = ((bytes(2 * i) & 0xff) |
-                (bytes(2 * i + 1).toInt << 8)).toShort.toInt
-              sum += v
-              hist((v + 32768) % dim) += 1L
-              i += 1
-            }
-            Some(Row(id, true, f.getSampleRate.toInt, f.getChannels,
-              n.toLong, sum, hist.toSeq))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        decoded.getOrElse(Row(id, false, null, null, null, null, null))
-      }
+        nullable = true)))) { (f, s) =>
+      val hist = new Array[Long](dim)
+      s.foreach(v => hist((v + 32768) % dim) += 1L)
+      Seq(f.getSampleRate.toInt, f.getChannels, s.length.toLong,
+        s.foldLeft(0L)(_ + _), hist.toSeq)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Deterministic synthetic YUV4MPEG2 payloads: `nFrames` frames of
     * `w`×`h` 4:4:4 video at `fps`, where plane values for id `d`,
@@ -1213,53 +1283,13 @@ object Multimodal {
   def audioFingerprint(media: DataFrame, windows: Int = 64): DataFrame = {
     require(windows > 0 && windows <= 64,
       s"audioFingerprint: windows must fit 64 bits, got $windows")
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("decode_ok", BooleanType, nullable = false),
-      StructField("afp", LongType, nullable = true)))
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val decoded: Option[Row] =
-          if (r.isNullAt(1)) None
-          else try {
-            val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-            val f = ais.getFormat
-            val target = new javax.sound.sampled.AudioFormat(
-              f.getSampleRate, 16, f.getChannels, true, false)
-            val pcm16 =
-              if (f.getSampleSizeInBits == 16 && !f.isBigEndian &&
-                f.getEncoding ==
-                  javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) ais
-              else javax.sound.sampled.AudioSystem
-                .getAudioInputStream(target, ais)
-            val bytes = pcm16.readAllBytes()
-            val n = bytes.length / 2
-            if (n == 0) throw new java.io.IOException("empty clip")
-            val energy = new Array[Long](windows)
-            var i = 0
-            while (i < n) {
-              val v = ((bytes(2 * i) & 0xff) |
-                (bytes(2 * i + 1).toInt << 8)).toShort.toInt
-              val w = math.min(i.toLong * windows / n, windows - 1L).toInt
-              energy(w) += math.abs(v).toLong
-              i += 1
-            }
-            val thr = energy.sum / windows
-            var fp = 0L
-            var w = 0
-            while (w < windows) {
-              if (energy(w) > thr) fp |= 1L << w
-              w += 1
-            }
-            Some(Row(id, true, fp))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        decoded.getOrElse(Row(id, false, null))
-      }
+    Sound.mapClips(media, StructType(Seq(
+      StructField("afp", LongType, nullable = true)))) { (_, s) =>
+      val energy = Sound.windowEnergy(s, windows)
+      val thr = energy.sum / windows
+      Seq(energy.indices.foldLeft(0L)((fp, w) =>
+        if (energy(w) > thr) fp | 1L << w else fp))
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Audio activity card — the per-clip quality row an audio-ingest
@@ -1281,60 +1311,21 @@ object Multimodal {
                         silenceDiv: Long = 4L,
                         clipMag: Int = 32700): DataFrame = {
     require(windows > 0, s"audioActivityCard: windows must be > 0")
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("decode_ok", BooleanType, nullable = false),
+    Sound.mapClips(media, StructType(Seq(
       StructField("n_samples", LongType, nullable = true),
       StructField("silent_windows", LongType, nullable = true),
       StructField("clipped", LongType, nullable = true),
       StructField("peak", LongType, nullable = true),
-      StructField("total_abs", LongType, nullable = true)))
-    val rdd = media.select("media_id", "payload").rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val decoded: Option[Row] =
-          if (r.isNullAt(1)) None
-          else try {
-            val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-            val f = ais.getFormat
-            val target = new javax.sound.sampled.AudioFormat(
-              f.getSampleRate, 16, f.getChannels, true, false)
-            val pcm16 =
-              if (f.getSampleSizeInBits == 16 && !f.isBigEndian &&
-                f.getEncoding ==
-                  javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED) ais
-              else javax.sound.sampled.AudioSystem
-                .getAudioInputStream(target, ais)
-            val bytes = pcm16.readAllBytes()
-            val n = bytes.length / 2
-            if (n == 0) throw new java.io.IOException("empty clip")
-            val energy = new Array[Long](windows)
-            var clipped = 0L
-            var peak = 0L
-            var i = 0
-            while (i < n) {
-              val v = ((bytes(2 * i) & 0xff) |
-                (bytes(2 * i + 1).toInt << 8)).toShort.toInt
-              val a = math.abs(v).toLong
-              val w = math.min(i.toLong * windows / n, windows - 1L).toInt
-              energy(w) += a
-              if (a >= clipMag) clipped += 1L
-              if (a > peak) peak = a
-              i += 1
-            }
-            val total = energy.sum
-            // silent iff energy_w * windows * silenceDiv < total — the
-            // all-integer spelling of energy_w < mean / silenceDiv
-            val silent = energy.count(e =>
-              e * windows * silenceDiv < total).toLong
-            Some(Row(id, true, n.toLong, silent, clipped, peak, total))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        decoded.getOrElse(Row(id, false, null, null, null, null, null))
-      }
+      StructField("total_abs", LongType, nullable = true)))) { (_, s) =>
+      val energy = Sound.windowEnergy(s, windows)
+      val abs = s.map(v => math.abs(v).toLong)
+      val total = energy.sum
+      // silent iff energy_w * windows * silenceDiv < total — the
+      // all-integer spelling of energy_w < mean / silenceDiv
+      val silent = energy.count(e => e * windows * silenceDiv < total).toLong
+      Seq(s.length.toLong, silent, abs.count(_ >= clipMag).toLong, abs.max,
+        total)
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Shot-boundary detection over per-frame perceptual hashes (the

@@ -13,8 +13,11 @@ package graft.ext
   * torn-state recovery semantics (delmarks, staged swaps) are defined
   * over a specific commit sequence and are spec-pinned.
   *
-  * Results return in task order; exceptions propagate to the caller
-  * (first failing task wins, the pool is always shut down). */
+  * Results return in task order. Every task settles before the call
+  * returns or throws: a failure is rethrown (the first in task order)
+  * only after its siblings finish, so no write started here outlives
+  * the call to race a caller's retry or cleanup. The pool is always
+  * shut down. */
 private[graft] object Par {
   def run[A](tasks: Seq[() => A], maxThreads: Int = 4): Seq[A] = {
     if (tasks.lengthCompare(2) < 0) return tasks.map(_())
@@ -24,8 +27,9 @@ private[graft] object Par {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       val futs = tasks.map(t => scala.concurrent.Future(t()))
-      futs.map(scala.concurrent.Await
-        .result(_, scala.concurrent.duration.Duration.Inf))
+      futs.map(f => scala.util.Try(scala.concurrent.Await
+          .result(f, scala.concurrent.duration.Duration.Inf)))
+        .map(_.get)
     } finally pool.shutdown()
   }
 }

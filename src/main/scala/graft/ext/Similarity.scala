@@ -496,7 +496,8 @@ object Similarity {
     require(k > 0, "mutualKnnClusters: k > 0")
     // cells <= 0 (the default) derives the cell count from the corpus
     // ([[Clustering.autoCells]]) so the pair space stays linear.
-    val nCells = if (cells > 0) cells else Clustering.autoCells(emb)
+    val n = emb.count()
+    val nCells = if (cells > 0) cells else Clustering.autoCells(n)
     val assign = graft.ext.Clustering.kmeans(emb, nCells, iters, idCol, vecCol)
       .select(col("vec_id"), col("cluster"))
     val side = emb.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
@@ -517,8 +518,13 @@ object Similarity {
       .select(col("x.a").as("a"), col("x.b").as("b"))
     val cl = graft.ext.Dedup.nearDupClusters(mutual)
       .select(col("doc_id").as("vec_id"), col("cluster").as("cluster_id"))
+    // the label table is id-sized and arrives as a checkpoint with no
+    // usable size estimate: broadcast it under nearDupClusters' own
+    // small gate (the corpus row count bounds its rows), else this
+    // join plans as a sort-merge
     emb.select(col(idCol).as("vec_id"))
-      .join(cl, Seq("vec_id"), "left")
+      .join(if (n < graft.SparkConfs.SmallLoopRows) broadcast(cl) else cl,
+        Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
   }

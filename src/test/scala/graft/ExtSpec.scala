@@ -1150,6 +1150,22 @@ class ExtSpec extends SparkSuite {
     assert(Dedup.embeddingNearDupBlocked(emb.limit(0), 0.9).count() == 0)
   }
 
+  test("embeddingNearDup: partition-invariant, and the pair sweep runs on every core (X1)") {
+    val emb = (0L until 60L).map { i =>
+      (i, Array.tabulate(8)(j => math.sin(i * 0.37 + j % 3).toFloat))
+    }.toDF("vec_id", "embedding")
+    val one = Dedup.embeddingNearDup(emb.coalesce(1), 0.5)
+    val eight = Dedup.embeddingNearDup(emb.repartition(8), 0.5)
+    val got = one.as[(Long, Long, Double)].collect()
+    assert(got.length > 100 && got.forall(t => t._1 < t._2))
+    assert(got.toSet == eight.as[(Long, Long, Double)].collect().toSet)
+    // the streamed side of the all-pairs join is spread over
+    // defaultParallelism partitions even when the input is one split:
+    // the final (pair) stage runs one task per partition of this RDD
+    assert(one.queryExecution.toRdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+  }
+
   test("chunking: overlapping stride windows, no redundant-subset tail (X3)") {
     val d = Seq((1L, "a b c d e f g h i j")).toDF("doc_id", "text")
     val out = TextOps.chunk(d, window = 4, stride = 2).orderBy("chunk_idx")
@@ -1707,6 +1723,95 @@ class ExtSpec extends SparkSuite {
     val res = Multimodal.audioFingerprint(
       spark.createDataFrame(rows, Multimodal.mediaSchema)).collect()
     assert(res.forall(!_.getBoolean(1)))
+  }
+
+  test("audio decode: every payload family matches AudioSystem's own dispatch, MIDI included (X4)") {
+    import javax.sound.sampled._
+    // the pre-resolved provider path must pick the same reader and
+    // codec as AudioSystem for every family the engine meets
+    val ids = Seq(3L, 40L).toDF("id")
+    // a minimal Standard MIDI file: header chunk + one empty track
+    val midi = "MThd".getBytes("US-ASCII") ++
+      Array[Byte](0, 0, 0, 6, 0, 0, 0, 1, 0, 96) ++
+      "MTrk".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 4, 0, -1, 0x2f, 0)
+    def media(id: Long, p: Array[Byte]) = org.apache.spark.sql.Row(
+      id, "audio", p, null, null, null, null)
+    val odd = spark.createDataFrame(java.util.Arrays.asList(
+      media(90L, null),
+      media(91L, "RIFF\u0000\u0001WAVEfmt garbage".getBytes("US-ASCII")),
+      media(92L, Array.fill[Byte](40)(0x13)),
+      media(93L, "MT".getBytes("US-ASCII")),
+      media(94L, midi)), Multimodal.mediaSchema)
+    val all = Multimodal.synthesizeWav(ids, "id", 96)
+      .unionByName(Multimodal.synthesizeUlawWav(
+        ids.select(($"id" + 10L).as("id")), "id", 96))
+      .unionByName(Multimodal.synthesizeAiff(
+        ids.select(($"id" + 20L).as("id")), "id", 96, 11025))
+      .unionByName(odd)
+    // reference: the JDK's public entry points, one call per row
+    def viaAudioSystem(id: Long, p: Array[Byte]): Seq[Any] =
+      (if (p == null) None else try {
+        val ais = AudioSystem.getAudioInputStream(
+          new java.io.ByteArrayInputStream(p))
+        val f = ais.getFormat
+        val pcm = AudioSystem.getAudioInputStream(
+          new AudioFormat(f.getSampleRate, 16, f.getChannels, true, false),
+          ais).readAllBytes()
+        val v = (0 until pcm.length / 2).map(i =>
+          ((pcm(2 * i) & 0xff) | (pcm(2 * i + 1).toInt << 8)).toShort.toInt)
+        val hist = Array.fill(16)(0L)
+        v.foreach(x => hist((x + 32768) % 16) += 1L)
+        Some(Seq(f.getSampleRate.toInt, f.getChannels, v.length.toLong,
+          v.map(_.toLong).sum, hist.toSeq))
+      } catch { case scala.util.control.NonFatal(_) => None }) match {
+        case Some(fs) => Seq(id, true) ++ fs
+        case None => Seq(id, false, null, null, null, null, null)
+      }
+    // SoftMidiAudioFileReader renders through the JDK's software synth,
+    // which caches its generated soundbank under user.home: keep that
+    // inside a temp dir
+    val home = System.getProperty("user.home")
+    val tmpHome = java.nio.file.Files.createTempDirectory("audio-spec")
+    System.setProperty("user.home", tmpHome.toString)
+    try {
+      val want = all.select("media_id", "payload").collect()
+        .map(r => viaAudioSystem(r.getLong(0), r.getAs[Array[Byte]](1)))
+        .sortBy(_.head.asInstanceOf[Long]).toSeq
+      val got = Multimodal.decodeAudio(all, 16).orderBy("media_id")
+        .collect().map(_.toSeq).toSeq
+      assert(got == want)
+      val ok = got.filter(_(1) == true).map(_.head).toSet
+      assert(ok == Set(3L, 40L, 13L, 50L, 23L, 60L, 94L),
+        "every real clip decodes; every poison row degrades")
+      // the MThd file reached the MIDI reader: rendered by the synth
+      assert(got.find(_.head == 94L).get(2) == 44100)
+    } finally {
+      System.setProperty("user.home", home)
+      org.apache.commons.io.FileUtils.deleteDirectory(tmpHome.toFile)
+    }
+  }
+
+  test("Par.run: a failure surfaces only after every sibling task has settled") {
+    val sibling = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val err = intercept[IllegalStateException] {
+      graft.ext.Par.run(Seq(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(300); sibling.set(true) }))
+    }
+    assert(err.getMessage == "first")
+    assert(sibling.get, "the sibling must finish before run() throws")
+    assert(graft.ext.Par.run(Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
+  }
+
+  test("audio decode: a 4-partition decode equals a 1-partition decode (X4)") {
+    val ids = spark.range(0, 400).select($"id".as("doc_id"))
+    val media = Multimodal.synthesizeUlawWav(ids, "doc_id", 128)
+      .unionByName(Multimodal.synthesizeWav(
+        ids.select(($"doc_id" + 1000L).as("doc_id")), "doc_id", 128))
+    val one = Multimodal.decodeAudio(media.coalesce(1), 16)
+    val four = Multimodal.decodeAudio(media.repartition(4), 16)
+    assert(four.rdd.getNumPartitions == 4)
+    assert(rows(four) == rows(one) && rows(one).size == 800)
   }
 
   test("videoFrameHashes: per-frame prints, shared-frame pairing, poison (X4)") {

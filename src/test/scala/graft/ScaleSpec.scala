@@ -707,4 +707,21 @@ class ScaleSpec extends SparkSuite {
     assert(graft.SparkConfs.SmallLoopRows * 5 <=
       graft.SparkConfs.InterpretedRows)
   }
+
+  test("scopedConfs: a conf that refuses to set rolls the whole scope back") {
+    val parts = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(parts)
+    // a static conf cannot change at runtime, so its set throws after
+    // the partitions override has already landed
+    intercept[org.apache.spark.sql.AnalysisException] {
+      graft.SparkConfs.scopedConfs(spark, "rollback", Map(
+        parts -> "3", "spark.sql.warehouse.dir" -> "/nowhere"))(())
+    }
+    assert(spark.conf.get(parts) == before, "landed overrides are restored")
+    // the depth was undone too: the next scope saves and restores again
+    graft.SparkConfs.scopedConfs(spark, "rollback", Map(parts -> "5")) {
+      assert(spark.conf.get(parts) == "5")
+    }
+    assert(spark.conf.get(parts) == before)
+  }
 }
