@@ -159,6 +159,45 @@ object SparkConfs {
       // that a tiny exchange isn't 32 near-empty tasks
       "spark.sql.shuffle.partitions" -> "4"))(body)
 
+  /** Row count for a size gate: exact and free when `df` is a
+    * projection of a LOADED in-memory cached table (Spark's cache
+    * counted the rows while filling its batches), otherwise one
+    * `count()` job. For gates only, never for answers — a cache block
+    * that was evicted and rebuilt counts its rows again. */
+  def gateRows(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def cached(p: LogicalPlan): Option[BigInt] = p match {
+      case Project(_, child) => cached(child)
+      case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.stats.rowCount
+      case _ => None
+    }
+    cached(df.queryExecution.optimizedPlan).map(_.toLong).getOrElse(df.count())
+  }
+
+  /** `df.localCheckpoint()` and its row count from the same job: the
+    * count rides the checkpoint action as an `Observation` instead of
+    * a separate `count()` job. */
+  def checkpointCounted(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, Long) = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val obs = new org.apache.spark.sql.Observation()
+    val cp = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    (cp, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** Whether the distinct endpoints of the pair list `pairs` (columns
+    * `a`, `b`, `rows` rows) number under [[SmallLoopRows]]. There are
+    * at most 2·rows of them, so below that bound the answer is yes
+    * with no job; above it one distinct count decides. */
+  def endpointsUnder(pairs: org.apache.spark.sql.DataFrame, a: String,
+                     b: String, rows: Long): Boolean = {
+    import org.apache.spark.sql.functions.col
+    2 * rows < SmallLoopRows || pairs.select(col(a).as("x"))
+      .unionAll(pairs.select(col(b).as("x"))).distinct().count() < SmallLoopRows
+  }
+
   /** Run `body` with Catalyst constraint propagation off. The
     * self-referential union shape of iterative pair-state loops
     * (state ∪ fresh where fresh's plan references state's attributes

@@ -1221,20 +1221,17 @@ object LinkAnalysis {
     * SHRINKS and is checkpointed (the kcore round pattern). */
   def maximalMatching(pairs: DataFrame, rounds: Int = 6): DataFrame = {
     require(rounds >= 1, s"maximalMatching: rounds >= 1, got $rounds")
-    var live = pairs.select("a", "b").filter(col("a") < col("b")).distinct()
-      .withColumn("p", conv(substring(md5(concat(col("a").cast("string"),
-        lit(":"), col("b").cast("string"))), 1, 15), 16, 10).cast("long"))
-      .localCheckpoint()
+    val (live0, mE) = graft.SparkConfs.checkpointCounted(
+      pairs.select("a", "b").filter(col("a") < col("b")).distinct()
+        .withColumn("p", conv(substring(md5(concat(col("a").cast("string"),
+          lit(":"), col("b").cast("string"))), 1, 15), 16, 10).cast("long")))
+    var live = live0
     var acc = live.select(col("a"), col("b"), lit(0).as("round"))
       .where(lit(false))
     // small-graph fast path (see louvainLocalMove): best/matched are
     // VERTEX-sized, live only shrinks — the broadcast hint gates on
-    // the endpoint count (one distinct count on the checkpointed pair
-    // list, amortized over rounds), the conf gate on per-round work
-    val mE = live.count()
-    val nV = live.select(col("a").as("x"))
-      .unionAll(live.select(col("b").as("x"))).distinct().count()
-    val small = nV < graft.SparkConfs.SmallLoopRows
+    // the endpoint count, the conf gate on per-round work
+    val small = graft.SparkConfs.endpointsUnder(live, "a", "b", mE)
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, 3 * mE) {
     for (r <- 1 to rounds) {

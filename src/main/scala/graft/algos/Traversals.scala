@@ -71,12 +71,12 @@ object Traversals {
     * sweeps use [[bfsLabelProp]]. */
   def bfsFrom(edges: DataFrame, seeds: DataFrame, maxDist: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    // one count per traversal (amortized over rounds): the codegen
-    // gate must see the per-round edge scan, not just the frontier
-    val eRows = e.count()
-    var frontier = seeds.select(col("vid")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint()
-    var frontierRows = frontier.count()
+    // the codegen and small-loop gates must see the per-round edge
+    // scan, not just the frontier: a loaded cached edge table reports
+    // its row count for free, anything else pays one count per
+    // traversal (amortized over rounds)
+    val eRows = graft.SparkConfs.gateRows(e)
+    var (frontier, frontierRows) = seedState(seeds)
     var visited = frontier
     var visitedRows = frontierRows
     var depth = 0
@@ -96,23 +96,21 @@ object Traversals {
       // Anti-join BEFORE distinct — the anti side is a map-side
       // broadcast filter, so the distinct's shuffle carries only
       // genuinely new vertices instead of every matched edge row.
-      // observe() rides the checkpoint action, so each round is ONE
+      // the count rides the checkpoint action, so each round is ONE
       // job — a separate count() job per round costs ~0.1s x rounds
-      val obs = new org.apache.spark.sql.Observation()
-      val next = timed(s"bfsFrom round $depth checkpoint") {
+      val (next, nextRows) = timed(s"bfsFrom round $depth checkpoint") {
         maybeInterpreted(frontier, eRows + visitedRows) {
-          e.join(maybeBroadcast(frontier.select(col("vid").as("src")), frontierRows),
-              Seq("src"))
-            .select(col("dst").as("vid"))
-            .join(maybeBroadcast(visited.select("vid"), visitedRows),
-              Seq("vid"), "left_anti")
-            .distinct()
-            .withColumn("dist", lit(depth))
-            .observe(obs, count(lit(1)).as("n"))
-            .localCheckpoint()
+          graft.SparkConfs.checkpointCounted(
+            e.join(maybeBroadcast(frontier.select(col("vid").as("src")), frontierRows),
+                Seq("src"))
+              .select(col("dst").as("vid"))
+              .join(maybeBroadcast(visited.select("vid"), visitedRows),
+                Seq("vid"), "left_anti")
+              .distinct()
+              .withColumn("dist", lit(depth)))
         }
       }
-      frontierRows = obs.get("n").asInstanceOf[Long]
+      frontierRows = nextRows
       if (frontierRows == 0) done = true
       else {
         frontier = next
@@ -126,6 +124,11 @@ object Traversals {
     visited
   }
 
+  /** The seed vertices at dist 0, checkpointed, and their count. */
+  private def seedState(seeds: DataFrame): (DataFrame, Long) =
+    graft.SparkConfs.checkpointCounted(
+      seeds.select(col("vid")).distinct().withColumn("dist", lit(0)))
+
   /** BFS as min-dist label propagation: every round relaxes ALL edges
     * once (labels ⋈ edges, map-side-combined min). O(rounds × |E|)
     * regardless of frontier width — the right shape when the reached
@@ -134,10 +137,8 @@ object Traversals {
     * wide frontiers dominate. Rounds = eccentricity of the seed set. */
   def bfsLabelProp(edges: DataFrame, seeds: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    val eRows = e.count()
-    var labels = seeds.select(col("vid")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint()
-    var labelRows = labels.count()
+    val eRows = graft.SparkConfs.gateRows(e)
+    var (labels, labelRows) = seedState(seeds)
     var changed = if (labelRows == 0) 0L else 1L
     // same small-graph fast path as bfsFrom: labels broadcast per
     // round already; the gate drops AQE's per-round stage jobs
@@ -338,10 +339,11 @@ object Traversals {
     * graph-level entry point. */
   def componentsLogRoundsPairs(pairs: DataFrame): DataFrame = {
     // canonical (child, parent) with parent < child; self-loops drop
-    var e = pairs
+    val (pairs0, mE) = graft.SparkConfs.checkpointCounted(pairs
       .select(greatest(col("a"), col("b")).as("src"),
         least(col("a"), col("b")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+      .filter(col("src") =!= col("dst")).distinct())
+    var e = pairs0
     // small-graph fast path, REINSTATED at the r15 byte-derived bound
     // (r14 shipped it at InterpretedRows=20M and the verdict flagged a
     // g07/g57 regression on a contended host; the r15 quiet-host A/B
@@ -350,13 +352,10 @@ object Traversals {
     // regressed the leiden refinement sweep that rides this kernel:
     // g67 4.60→6.90 s, g68 7.23→8.64 s. Net: keep the gate, at the
     // 4M-row SmallLoopRows bound)
-    val mE = e.count()
     // the broadcast side (the per-node min table) is VERTEX-sized —
-    // gate the hint on the endpoint count (one distinct count on the
-    // checkpointed pair list), the conf gate on per-round edge work
-    val nV = e.select(col("src").as("x"))
-      .unionAll(e.select(col("dst").as("x"))).distinct().count()
-    val small = nV < graft.SparkConfs.SmallLoopRows
+    // gate the hint on the endpoint count, the conf gate on per-round
+    // edge work
+    val small = graft.SparkConfs.endpointsUnder(e, "src", "dst", mE)
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, 2 * mE) {
     var converged = mE == 0L

@@ -229,14 +229,23 @@ object Sampling {
     * global sort, no skew (md5 spreads uniformly); exactly the plan a
     * `write.partitionBy("shard")` export wants underneath. */
   def epochShuffle(df: DataFrame, keyCol: String, epoch: Int,
-                   shards: Int): DataFrame = {
+                   shards: Int): DataFrame =
+    epochPositions(epochTagged(df, keyCol, epoch, shards), keyCol)
+
+  /** The input plus the md5 hash `__eh` of "epoch:key" and the
+    * `shard` it maps to — the keys of [[epochShuffle]]. */
+  private def epochTagged(df: DataFrame, keyCol: String, epoch: Int,
+                          shards: Int): DataFrame = {
     require(shards > 0, s"epochShuffle: shards must be positive, got $shards")
     val h = md5(concat_ws(":", lit(epoch), col(keyCol).cast("string")))
-    val tagged = df
-      .withColumn("__eh", h)
+    df.withColumn("__eh", h)
       .withColumn("shard",
         pmod(conv(substring(col("__eh"), 1, 15), 16, 10).cast("long"),
           lit(shards.toLong)).cast("int"))
+  }
+
+  /** Per-shard positions of an [[epochTagged]] frame, `__eh` dropped. */
+  private def epochPositions(tagged: DataFrame, keyCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     tagged
       .withColumn("pos", row_number().over(
@@ -351,7 +360,13 @@ object Sampling {
   def writeTrainingShards(df: DataFrame, path: String, keyCol: String,
                           textCol: String, epoch: Int,
                           shards: Int): DataFrame = {
-    val sharded = epochShuffle(df, keyCol, epoch, shards)
+    // the [[epochShuffle]] layout with its exchange made explicit, into
+    // `shards` partitions: the window needs each shard in one partition
+    // anyway, and the explicit count keeps AQE from coalescing a small
+    // export's write into a single task
+    val sharded = epochPositions(
+      epochTagged(df, keyCol, epoch, shards).repartition(shards, col("shard")),
+      keyCol)
     sharded.write.mode("overwrite").partitionBy("shard").parquet(path)
     // a fresh export invalidates any retirement sidecar left by a
     // previous layout generation (overwrite clears the directory;
@@ -359,8 +374,16 @@ object Sampling {
     val tomb = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
     tomb.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
       .delete(tomb, true)
-    shardManifest(df.sparkSession.read.parquet(path), keyCol, textCol)
+    shardManifest(readWritten(sharded, path), keyCol, textCol)
   }
+
+  /** Read back a `partitionBy` layout just written from `written`,
+    * with that frame's schema instead of inferring one from the file
+    * footers (a job of its own). The reader makes every column
+    * nullable and appends the partition columns last, exactly as
+    * inference would; the rows still come from the files on disk. */
+  private[graft] def readWritten(written: DataFrame, path: String): DataFrame =
+    written.sparkSession.read.schema(written.schema).parquet(path)
 
   /** Token-budget selection — "take the best documents until the
     * token budget is spent", the final cut of a pretraining recipe
@@ -589,11 +612,11 @@ object Sampling {
                     srcPath: String, dstPath: String, plan: DataFrame,
                     keyCol: String, textCol: String): DataFrame = {
     val binOf = plan.select(col("shard"), col("bin"))
-    spark.read.parquet(srcPath)
+    val merged = spark.read.parquet(srcPath)
       .join(broadcast(binOf), Seq("shard"))
       .withColumn("shard", col("bin").cast("int")).drop("bin")
-      .write.mode("overwrite").partitionBy("shard").parquet(dstPath)
-    shardManifest(spark.read.parquet(dstPath), keyCol, textCol)
+    merged.write.mode("overwrite").partitionBy("shard").parquet(dstPath)
+    shardManifest(readWritten(merged, dstPath), keyCol, textCol)
   }
 
   /** GOVERNANCE delete for an exported shard layout (r12 verdict #6

@@ -54,9 +54,26 @@ final case class OnionGraph(vertices: DataFrame, edges: DataFrame) {
     OnionGraph(vertices, edges.filter(pred))
 
   /** Keep vertices in the given layers (`view_layers`,
-    * `searcher.py:244-282`), induced subgraph on the edges. */
-  def viewLayers(names: Seq[String]): OnionGraph =
-    filterVertices(col("layer").isin(names: _*))
+    * `searcher.py:244-282`), induced subgraph on the edges.
+    *
+    * Equal to `filterVertices(layer isin names)`, but the edges are
+    * first cut to `srcLayer IN names AND dstLayer IN names` (when the
+    * edge table carries those columns). The cut is exact: `OnionBuilder`
+    * derives `src = vid(srcLayer, srcId)` (and `dst` likewise), so an
+    * edge whose `src` lies in a layer-L vertex set has `srcLayer ∈ L`;
+    * the semi-joins still run, enforcing that both endpoints exist.
+    * It pays on a cached graph: the edge table is a union of
+    * per-relation inputs, so each cached batch holds one layer pair
+    * and the in-memory scan's per-batch min/max stats skip every batch
+    * of the other relations instead of decoding the whole edge set. */
+  def viewLayers(names: Seq[String]): OnionGraph = {
+    val vs = vertices.filter(col("layer").isin(names: _*))
+    val es =
+      if (!Seq("srcLayer", "dstLayer").forall(edges.columns.contains)) edges
+      else edges.filter(col("srcLayer").isin(names: _*) &&
+        col("dstLayer").isin(names: _*))
+    OnionGraph(vs, inducedEdges(vs, es))
+  }
 
   /** Per-vertex total degree in the current view (used by isolated-
     * vertex pruning, `searcher.py:340-341`). Single shuffle:
@@ -135,7 +152,12 @@ object OnionGraph {
 
   /** Edges whose BOTH endpoints exist in `vs` — double LEFT SEMI join.
     * At scale both semi-joins shuffle on the edge key being probed;
-    * small surviving vertex sets broadcast automatically (AQE). */
+    * small surviving vertex sets broadcast automatically (AQE).
+    * The probe reads every batch of `es`: a caller that knows the
+    * surviving layers cuts `es` on `srcLayer`/`dstLayer` first (the
+    * vid invariant makes that exact, see [[OnionGraph.viewLayers]]),
+    * which lets a cached, relation-clustered edge table skip the
+    * batches of the other layers. */
   def inducedEdges(vs: DataFrame, es: DataFrame): DataFrame = {
     val keep = vs.select(col("vid"))
     es.join(keep.withColumnRenamed("vid", "src"), Seq("src"), "left_semi")

@@ -183,6 +183,30 @@ class GraphOpsSpec extends SparkSuite {
     assert(a == b && a.nonEmpty)
   }
 
+  test("pageRankFixedPoint: job budget — invariants built once, no count jobs") {
+    val g = randomGraph(23, 40, 90)
+    g.vertices.cache(); g.edges.cache()
+    g.vertices.count(); g.edges.count()
+    try {
+      val iters = 4
+      val (ranks, log) = JobLog(spark) {
+        GraphOps.pageRankFixedPoint(g, iters).as[(Long, Long)].collect()
+      }
+      assert(ranks.length == 40)
+      // one checkpoint per invariant and per round, then the collect
+      assert(log.actions == Seq.fill(2 + iters)("localCheckpoint") :+ "collect",
+        log.actions)
+      // the actions above are the pin; the job count gets one job of
+      // headroom over today's 3·iters + 5 — per round the ranks
+      // broadcast, the gathered-sums broadcast and the checkpoint; once
+      // the edge slice, the vertex base (out-weight aggregate's shuffle
+      // stage, the join's stage, the checkpoint) and the final collect
+      val jobs = log.jobs
+      assert(jobs.size <= 3 * iters + 6,
+        s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    } finally { g.vertices.unpersist(); g.edges.unpersist() }
+  }
+
   test("pageRankFixedPoint is invariant under repartitioning") {
     val g0 = randomGraph(13, 30, 70)
     val g1 = graft.model.OnionGraph(g0.vertices.repartition(7),
@@ -212,6 +236,18 @@ class GraphOpsSpec extends SparkSuite {
     val w1 = GraphOps.pageRankWeightedFixedPoint(gw2, 3)
       .as[(Long, Long)].collect().toMap
     assert(w0 == w1)
+  }
+
+  test("pageRankWeightedFixedPoint: weights whose r·w product overflows BIGINT give the same ranks") {
+    // (r·k·w) DIV (k·W) == (r·w) DIV W exactly; at k = 1e9 the centi-
+    // weights reach 3e11 and r·w (r ~ 1e9) leaves the BIGINT range
+    val g0 = randomGraph(19, 25, 60)
+    def ranks(k: Double) = GraphOps.pageRankWeightedFixedPoint(
+        graft.model.OnionGraph(g0.vertices, g0.edges.withColumn("qty",
+          (pmod(col("dst"), lit(3)) + 1).cast("double") * k)), 3)
+      .as[(Long, Long)].collect().toMap
+    val base = ranks(1.0)
+    assert(base.size == 25 && ranks(1e9) == base)
   }
 
   test("katzFixedPoint: exact hand-computed scores on a 3-chain") {

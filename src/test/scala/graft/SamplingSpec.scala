@@ -229,6 +229,43 @@ class SamplingSpec extends SparkSuite {
     assert(after != manifest && !after.exists(_._1 == 2))
   }
 
+  test("shard export + compaction: manifests from disk, no footer reads of what was just written, a parallel write") {
+    val d = (0L until 300L).map(i => (i, s"doc $i " + ("w " * (i % 7).toInt)))
+      .toDF("doc_id", "text")
+    val src = java.nio.file.Files.createTempDirectory("x159src").toString
+    val dst = java.nio.file.Files.createTempDirectory("x159dst").toString
+    val (manifest, writeLog) = JobLog(spark) {
+      Sampling.writeTrainingShards(d, src, "doc_id", "text", epoch = 2,
+        shards = 8).as[(Int, Long, Long, Long)].collect().toSet
+    }
+    val planned = Sampling.shardManifest(
+        Sampling.epochShuffle(d, "doc_id", 2, 8), "doc_id", "text")
+      .as[(Int, Long, Long, Long)].collect().toSet
+    assert(manifest == planned && manifest.size == 8)
+    assert(!writeLog.jobs.exists(_.schemaJob), writeLog.jobs)
+    // the partitioned write itself runs in more than one task
+    assert(writeLog.writeTasks > 1, writeLog)
+    // the read-back schema is the one footer inference would give
+    assert(Sampling.readWritten(Sampling.epochShuffle(d, "doc_id", 2, 8), src)
+      .schema == spark.read.parquet(src).schema)
+    val plan = Sampling.planCompaction(
+      manifest.toSeq.toDF("shard", "n_rows", "n_tokens", "checksum"),
+      "n_tokens", target = 200L)
+    val (merged, compactLog) = JobLog(spark) {
+      Sampling.runCompaction(spark, src, dst, plan, "doc_id", "text")
+        .as[(Int, Long, Long, Long)].collect().toSet
+    }
+    // only the source layout's schema is inferred; the merged one is not
+    assert(compactLog.jobs.count(_.schemaJob) == 1, compactLog.jobs)
+    val bins = plan.select("shard", "bin").as[(Int, Long)].collect().toMap
+    val expect = manifest.groupBy(m => bins(m._1).toInt).map { case (b, ms) =>
+      (b, ms.toSeq.map(_._2).sum, ms.toSeq.map(_._3).sum, ms.toSeq.map(_._4).sum)
+    }.toSet
+    assert(merged == expect)
+    assert(Sampling.shardManifest(spark.read.parquet(dst), "doc_id", "text")
+      .as[(Int, Long, Long, Long)].collect().toSet == merged)
+  }
+
   test("epochShuffle: per-shard 1..n positions, epoch-fresh permutation, stable") {
     val d = (0L until 500L).map(i => (i, s"t$i")).toDF("id", "payload")
     val out = Sampling.epochShuffle(d, "id", epoch = 3, shards = 4)

@@ -77,6 +77,38 @@ class TraversalsSpec extends SparkSuite {
       Map("L1:a" -> 0, "L1:b" -> 1, "L1:c" -> 2))
   }
 
+  test("bfsFrom: no count job over a loaded cached edge table; same answer over an uncached view") {
+    val nodes = (0 until 60).map(i => (i.toString, s"L${i % 2}"))
+      .toDF("node_id", "layer")
+    val edges = (0 until 59).flatMap(i => Seq(
+        (i.toString, s"L${i % 2}", (i + 1).toString, s"L${(i + 1) % 2}"),
+        (i.toString, s"L${i % 2}", ((i * 7 + 3) % 60).toString,
+          s"L${((i * 7 + 3) % 60) % 2}")))
+      .toDF("source_id", "source_layer", "target_id", "target_layer")
+    val plain = OnionBuilder.grow(nodes, edges, GrowOptions())
+    val cached = graft.model.OnionGraph(plain.vertices.cache(),
+      plain.edges.cache())
+    cached.vertices.count(); cached.edges.count()
+    try {
+      def seed(gr: graft.model.OnionGraph) =
+        gr.vertices.filter(col("nodeId") === "0").select("vid")
+      val (hot, log) = JobLog(spark) {
+        Traversals.bfsFrom(cached.edges, seed(cached), 4)
+          .as[(Long, Int)].collect().toMap
+      }
+      assert(!log.actions.contains("count"), log.actions)
+      assert(hot.size > 5 && hot.values.max == 4)
+      // a filtered view is not a loaded cache: it pays one count, and
+      // the traversal gives the same answer
+      val (cold, coldLog) = JobLog(spark) {
+        Traversals.bfsFrom(plain.edges.filter(col("src") =!= 0L),
+          seed(plain), 4).as[(Long, Int)].collect().toMap
+      }
+      assert(coldLog.actions.count(_ == "count") == 1, coldLog.actions)
+      assert(cold == hot)
+    } finally { cached.vertices.unpersist(); cached.edges.unpersist() }
+  }
+
   test("unbounded downstream reaches closure incl. cross-layer") {
     assert(distMap("L1", "a", -1, Traversals.Downstream) ==
       Map("L1:a" -> 0, "L1:b" -> 1, "L1:c" -> 2, "L1:d" -> 3, "L2:x" -> 3))

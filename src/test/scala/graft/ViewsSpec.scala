@@ -56,6 +56,67 @@ class ViewsSpec extends SparkSuite {
     assert(v.numVertices == 4 && v.numEdges == 3)
   }
 
+  test("viewLayers == filterVertices(layer isin …): edges leaving the view drop, repartitioned too") {
+    val rnd = new scala.util.Random(7)
+    val nodes = (0 until 40).map(i => (i.toString, s"L${i % 4}"))
+      .toDF("node_id", "layer")
+    val edges = (0 until 120).map { _ =>
+      val a = rnd.nextInt(40); val b = rnd.nextInt(40)
+      (a.toString, s"L${a % 4}", b.toString, s"L${b % 4}")
+    }.toDF("source_id", "source_layer", "target_id", "target_layer")
+    val big = OnionBuilder.grow(nodes, edges, GrowOptions())
+    val shuffled = graft.model.OnionGraph(big.vertices.repartition(3),
+      big.edges.repartition(5))
+    for (graph <- Seq(g, big, shuffled);
+         names <- Seq(Seq("L1"), Seq("L1", "L2"), Seq("L2", "L3"),
+           Seq("L0", "L3", "L1"), Seq("nope"))) {
+      val view = graph.viewLayers(names)
+      val ref = graph.filterVertices(col("layer").isin(names: _*))
+      assert(rows(view.vertices) == rows(ref.vertices), names)
+      assert(rows(view.edges) == rows(ref.edges), names)
+    }
+    // the random graph has edges with one endpoint outside the view
+    val v01 = big.viewLayers(Seq("L0", "L1"))
+    assert(big.edges.filter(col("srcLayer").isin("L0", "L1") =!=
+      col("dstLayer").isin("L0", "L1")).count() > 0)
+    assert(v01.edges.filter(!col("srcLayer").isin("L0", "L1") ||
+      !col("dstLayer").isin("L0", "L1")).count() == 0)
+  }
+
+  test("viewLayers on a cached graph skips the in-memory batches of other relations") {
+    // three relations, each its own input like the star graph's
+    // edge union: A->B and B->C are big, C->D is small
+    val key = "spark.sql.inMemoryColumnarStorage.batchSize"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "16")
+    val cached = try {
+      val nodes = Seq("A", "B", "C", "D").flatMap(l =>
+        (0 until 400).map(i => (i.toString, l))).toDF("node_id", "layer")
+      def rel(s: String, t: String, n: Int) =
+        (0 until n).map(i => (i.toString, s, ((i * 7) % 400).toString, t))
+          .toDF("source_id", "source_layer", "target_id", "target_layer")
+      val built = OnionBuilder.grow(nodes,
+        rel("A", "B", 400).unionByName(rel("B", "C", 400))
+          .unionByName(rel("C", "D", 20)),
+        GrowOptions(dropDuplicates = false)).cache()
+      built.vertices.count(); built.edges.count()
+      built
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    try {
+      val view = cached.viewLayers(Seq("C", "D")).edges
+      assert(view.count() == 20)
+      view.collect()
+      val scans = ViewsSpec.edgeScans(view)
+      assert(scans.nonEmpty, view.queryExecution.executedPlan)
+      val scanned = scans.map(_.metrics("numOutputRows").value).sum
+      assert(scanned < 820 / 10,
+        s"the view's edge scan read $scanned of 820 cached rows")
+    } finally { cached.vertices.unpersist(); cached.edges.unpersist() }
+  }
+
   test("pruneIsolated drops degree-0 vertices in view (F4)") {
     val v = g.filterEdges(col("w") > 2.5).pruneIsolated()
     assert(rows(v.vertices.select("nodeId")) == Set(Seq("a"), Seq("b"), Seq("c"), Seq("e")))
@@ -163,4 +224,16 @@ class ViewsSpec extends SparkSuite {
     val card2 = Exporter.graphCard(pruned).as[(String, Long)].collect().toMap
     assert(card2("n_isolated") == 1L && card2("n_edges") == 3L)
   }
+}
+
+object ViewsSpec
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+
+  /** The in-memory scans of an executed plan that read the edge table. */
+  def edgeScans(df: org.apache.spark.sql.DataFrame): Seq[InMemoryTableScanExec] =
+    collect(df.queryExecution.executedPlan) {
+      case s: InMemoryTableScanExec
+          if s.relation.output.exists(_.name == "srcLayer") => s
+    }
 }
