@@ -2623,10 +2623,10 @@ object SparkEntry {
       (s, dir) => {
         val g = graph(s, dir)
         val seed = minSeed(s, dir, "orders", "o_orderkey")
-        val seedVid = g.vertices
+        val seeds = g.vertices
           .filter(col("layer") === "order" && col("nodeId") === seed)
-          .select("vid").head().getLong(0)
-        GraphOps.pregelBfs(g, Set(seedVid), 3)
+          .select("vid")
+        GraphOps.pregelBfsSeeds(g, seeds, 3)
           .join(g.vertices, Seq("vid"))
           .select(col("layer"), col("nodeId").as("node_id"), col("dist"))
           .orderBy("layer", "node_id")
@@ -2714,15 +2714,14 @@ object SparkEntry {
     QueryDef("g57_components_logstar",
       // weak components via alternating large-star/small-star
       // contraction (Kiveris et al. 2014): O(log n) rounds regardless
-      // of diameter, vs the label-prop kernel's Ω(diameter) — the
-      // WCC-side fix for the SccStress chain bound (SCALE.md). Same
-      // output contract as g07's kernel; per-vertex assignments
-      // checked, not just sizes.
+      // of diameter, vs label propagation's Ω(diameter) (the chain
+      // measurements in SCALE.md). Same kernel as g07; per-vertex
+      // assignments checked, not just sizes.
       (s, dir) => {
         val g = graph(s, dir)
           .viewLayers(Seq("customer", "nation"))
           .filterEdges(col("relation") === "cust_nation")
-        Traversals.weakComponentsLogRounds(g)
+        Traversals.weakComponents(g)
           .join(g.vertices, Seq("vid"))
           .select(concat_ws(":", col("layer"), col("nodeId")).as("node"),
             col("comp"))
@@ -4169,9 +4168,9 @@ object SparkEntry {
       // the recall card over the RESIDUAL layout — the two serving
       // candidates (x137 raw vs x139 residual) measured on the same
       // axis, so the per-corpus encoding decision reads straight off
-      // two hash-matched cards (tools.RecallGain showed the choice is
-      // corpus-dependent: residual sweeps 19%→100% on clustered data
-      // and is neutral on cluster-free data). Per-(query, cell)
+      // two hash-matched cards (SCALE.md's recall-gain run showed the
+      // choice is corpus-dependent: residual sweeps 19%→100% on
+      // clustered data and is neutral on cluster-free data). Per-(query, cell)
       // residual LUTs over every cell; the nProbe filter applies at
       // scoring time.
       (s, dir) => {

@@ -18,7 +18,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  *
  * Each kernel returns a DataFrame keyed by `vid` so results compose
  * with the relational layer (and with the DuckDB-oracle relabeling in
- * [[Traversals]]).
+ * [[Traversals]]). One kernel per problem and engine: BFS is
+ * [[pregelBfsSeeds]] here and [[Traversals.bfsFrom]] as a DataFrame
+ * loop; PageRank is [[pageRankStatic]] here and the exact
+ * [[pageRankFixedPoint]] loop; weak components run only as the
+ * DataFrame star-contraction loop [[Traversals.weakComponents]].
  */
 object GraphOps {
 
@@ -93,14 +97,26 @@ object GraphOps {
     gxCache.computeIfAbsent(g, _ => buildProjection(g)(r =>
       Iterator(Edge(r.getLong(0), r.getLong(1), 1.0))))
 
-  /** The ONE min-dist Pregel kernel every BFS variant runs: vertices
-    * start at 0 (seeds) or MaxValue, messages relax dist+1 along the
-    * chosen direction(s). `forward` sends src->dst, `backward`
-    * dst->src; both on = undirected sweep — all three directions run
-    * on the single memoized directed projection. */
-  private def minDistPregel(g: OnionGraph, init: Graph[Int, Double],
-                            maxDist: Int, forward: Boolean,
-                            backward: Boolean): DataFrame = {
+  /** Pregel BFS — the GraphX twin of [[Traversals.bfsFrom]]: hop
+    * distance from a DataFrame seed set over the single memoized
+    * directed projection. Vertices start at 0 (seeds, joined in via
+    * outerJoinVertices — no driver-side collect, so seed sets of any
+    * size work) or MaxValue; messages relax dist+1 src->dst, or
+    * dst->src with `reverse = true` (no reversed edge copy), or both
+    * ways with `undirected = true` (no symmetrized copy). `maxDist`
+    * bounds the supersteps like the reference's `max_dist`
+    * (`searcher.py:208`); < 0 is unbounded. Returns (vid, dist). */
+  def pregelBfsSeeds(g: OnionGraph, seeds: DataFrame, maxDist: Int = -1,
+                     reverse: Boolean = false,
+                     undirected: Boolean = false): DataFrame = {
+    require(!(reverse && undirected),
+      "pregelBfsSeeds: reverse has no meaning on an undirected sweep")
+    val forward = undirected || !reverse
+    val backward = undirected || reverse
+    val seedRdd: RDD[(VertexId, Int)] =
+      seeds.select("vid").rdd.map(r => (r.getLong(0), 0))
+    val init = toGraphX(g).outerJoinVertices(seedRdd)((_, _, o) =>
+      o.getOrElse(Int.MaxValue))
     val iters = if (maxDist < 0) Int.MaxValue else maxDist
     val res = init.pregel(Int.MaxValue, iters)(
       (_, d, msg) => math.min(d, msg),
@@ -118,36 +134,6 @@ object GraphOps {
       (a, b) => math.min(a, b))
     vidValueDf(g.spark, res.vertices.filter(_._2 != Int.MaxValue), "dist",
       org.apache.spark.sql.types.IntegerType)
-  }
-
-  /** Distributed seed init: seeds joined via outerJoinVertices — no
-    * driver-side collect, so seed sets of any size work. */
-  private def seedInit(gx: Graph[Unit, Double], seeds: DataFrame): Graph[Int, Double] = {
-    val seedRdd: RDD[(VertexId, Int)] =
-      seeds.select("vid").rdd.map(r => (r.getLong(0), 0))
-    gx.outerJoinVertices(seedRdd)((_, _, o) => o.getOrElse(Int.MaxValue))
-  }
-
-  /** Pregel BFS with a DataFrame seed set over the single directed
-    * projection; `reverse = true` follows edges dst->src (no reversed
-    * edge copy); `undirected = true` relaxes along both directions of
-    * every edge (no symmetrized copy). Returns (vid, dist). */
-  def pregelBfsSeeds(g: OnionGraph, seeds: DataFrame, maxDist: Int = -1,
-                     reverse: Boolean = false,
-                     undirected: Boolean = false): DataFrame = {
-    require(!(reverse && undirected),
-      "pregelBfsSeeds: reverse has no meaning on an undirected sweep")
-    minDistPregel(g, seedInit(toGraphX(g), seeds), maxDist,
-      forward = undirected || !reverse, backward = undirected || reverse)
-  }
-
-  /** Pregel BFS: hop distance from the seed set, following edge
-    * direction; `maxIterations` bounds the search like the reference's
-    * `max_dist` (`searcher.py:208`). Returns (vid, dist). */
-  def pregelBfs(g: OnionGraph, seedVids: Set[Long], maxDist: Int): DataFrame = {
-    val init = toGraphX(g).mapVertices((id, _) =>
-      if (seedVids.contains(id)) 0 else Int.MaxValue)
-    minDistPregel(g, init, maxDist, forward = true, backward = false)
   }
 
   /** Weighted single-source shortest paths (Pregel relaxation): edge
@@ -198,13 +184,6 @@ object GraphOps {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField(name, dt, nullable = false))))
 
-  /** Weakly connected components (GraphX label propagation to min vid;
-    * deterministic because vid is a deterministic hash). Returns
-    * (vid, compVid). */
-  def connectedComponents(g: OnionGraph): DataFrame =
-    vidValueDf(g.spark, toGraphX(g).connectedComponents().vertices,
-      "compVid", org.apache.spark.sql.types.LongType)
-
   /** Strongly connected components — the reference's DEFAULT for
     * `view_components` (`searcher.py:284-295`). Iteration-bounded and
     * shuffle-heavy; fine at test scale, flagged for 100 TB
@@ -214,16 +193,12 @@ object GraphOps {
       "compVid", org.apache.spark.sql.types.LongType)
 
   /** PageRank over the multi-layer graph (the reference's README cites
-    * pagerank speed as its raison d'être; exposed as a first-class
-    * analytical kernel). Returns (vid, rank). */
-  def pageRank(g: OnionGraph, tol: Double = 1e-4, resetProb: Double = 0.15): DataFrame =
-    vidValueDf(g.spark, toGraphX(g).pageRank(tol, resetProb).vertices,
-      "rank", org.apache.spark.sql.types.DoubleType)
-
-  /** Fixed-iteration PageRank — bounded supersteps, the scale-safe
-    * default: a tolerance-driven fixpoint has no worst-case iteration
-    * bound, while `numIter` caps the job graph regardless of topology
-    * or damping. Returns (vid, rank). */
+    * pagerank speed as its raison d'être) — the one GraphX PageRank
+    * kernel, fixed-iteration: a tolerance-driven fixpoint has no
+    * worst-case iteration bound, while `numIter` caps the job graph
+    * regardless of topology or damping. Spec-pinned to converge to
+    * [[pageRankFixedPoint]], the DataFrame kernel. Returns
+    * (vid, rank). */
   def pageRankStatic(g: OnionGraph, numIter: Int = 15,
                      resetProb: Double = 0.15): DataFrame =
     vidValueDf(g.spark, toGraphX(g).staticPageRank(numIter, resetProb).vertices,

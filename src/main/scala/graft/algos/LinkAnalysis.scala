@@ -1387,24 +1387,6 @@ object LinkAnalysis {
         "sum_yy", "sum_xy")
   }
 
-  /** Convergence probe for [[corenessHIndex]]'s bounded-round
-    * contract: how many vertices' values still CHANGE in round
-    * `rounds` (i.e. between the (rounds−1)- and rounds-round
-    * decompositions). 0 means the bound is at/past the fixpoint at
-    * this data scale, so the published values are the exact coreness
-    * rather than a silent upper bound — the scale suite runs this at
-    * each benched SF (r9 ADVICE; `tools.CorenessProbe`), the same
-    * "measure, don't guess" treatment the round counts of the other
-    * iterative kernels get. */
-  def corenessLastRoundChanges(edges: DataFrame, rounds: Int): Long = {
-    require(rounds >= 1, s"corenessLastRoundChanges: rounds >= 1")
-    val prev = corenessHIndex(edges, rounds - 1)
-      .withColumnRenamed("coreness", "p")
-    val cur = corenessHIndex(edges, rounds)
-      .withColumnRenamed("coreness", "c")
-    prev.join(cur, Seq("id")).filter(col("p") =!= col("c")).count()
-  }
-
   /** Butterfly (bipartite 4-cycle) census card — the bipartite
     * analogue of the triangle count (g32): a butterfly is two
     * left-nodes sharing two right-nodes, the smallest cohesive motif

@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
  * search-space pruning (`searcher.py:208`). `localCheckpoint` every
  * few rounds keeps lineage bounded for deep traversals (SURVEY §7.4).
  *
- * GraphX Pregel equivalents live in [[GraphOps]]; these DataFrame
+ * One kernel per graph problem: BFS is [[bfsFrom]] (its GraphX Pregel
+ * twin is [[GraphOps.pregelBfsSeeds]]) and weak components is the
+ * star-contraction loop [[componentsLogRoundsPairs]]. The DataFrame
  * forms are the DuckDB-oracle-comparable path and are also what a
  * 100 TB run would use when the frontier stays FAR smaller than the
  * graph (semi-join pruning + AQE pick broadcast for small frontiers).
@@ -42,25 +44,6 @@ object Traversals {
   private def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
     if (rows >= 0 && rows < BroadcastRows) broadcast(df) else df
 
-  /** Small rounds (TOTAL scanned rows: edge table + iteration state
-    * under the shared threshold) run without whole-stage codegen — see
-    * [[graft.SparkConfs.maybeInterpreted]] for the rationale and for
-    * the measured negative result on also disabling AQE per-round. */
-  private def maybeInterpreted[A](df: DataFrame, rows: Long)(body: => A): A =
-    graft.SparkConfs.maybeInterpreted(df.sparkSession, rows)(body)
-
-  // Dev-only loop tracing: GRAFT_TRACE=1 prints per-round wall time.
-  private val trace = sys.env.contains("GRAFT_TRACE")
-  @inline private def timed[A](label: => String)(body: => A): A = {
-    if (!trace) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[trace] $label ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-  }
-
   /** BFS hop distances from seed vertices, following src->dst
     * (downstream). Returns (vid, dist). Seeds get dist 0.
     * maxDist < 0 means unbounded (reachability closure, T2).
@@ -68,7 +51,7 @@ object Traversals {
     * Frontier form: work per round is O(|frontier| ⋈ edges) — the
     * right shape when the reached set stays far smaller than the
     * graph (small frontiers broadcast under AQE). For full-coverage
-    * sweeps use [[bfsLabelProp]]. */
+    * sweeps use [[GraphOps.pregelBfsSeeds]]. */
   def bfsFrom(edges: DataFrame, seeds: DataFrame, maxDist: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     // the codegen and small-loop gates must see the per-round edge
@@ -98,8 +81,8 @@ object Traversals {
       // genuinely new vertices instead of every matched edge row.
       // the count rides the checkpoint action, so each round is ONE
       // job — a separate count() job per round costs ~0.1s x rounds
-      val (next, nextRows) = timed(s"bfsFrom round $depth checkpoint") {
-        maybeInterpreted(frontier, eRows + visitedRows) {
+      val (next, nextRows) =
+        graft.SparkConfs.maybeInterpreted(frontier.sparkSession, eRows + visitedRows) {
           graft.SparkConfs.checkpointCounted(
             e.join(maybeBroadcast(frontier.select(col("vid").as("src")), frontierRows),
                 Seq("src"))
@@ -109,7 +92,6 @@ object Traversals {
               .distinct()
               .withColumn("dist", lit(depth)))
         }
-      }
       frontierRows = nextRows
       if (frontierRows == 0) done = true
       else {
@@ -128,49 +110,6 @@ object Traversals {
   private def seedState(seeds: DataFrame): (DataFrame, Long) =
     graft.SparkConfs.checkpointCounted(
       seeds.select(col("vid")).distinct().withColumn("dist", lit(0)))
-
-  /** BFS as min-dist label propagation: every round relaxes ALL edges
-    * once (labels ⋈ edges, map-side-combined min). O(rounds × |E|)
-    * regardless of frontier width — the right shape when the reached
-    * set approaches the whole graph (e.g. multi-source backward
-    * sweeps), where [[bfsFrom]]'s growing visited-set anti-join and
-    * wide frontiers dominate. Rounds = eccentricity of the seed set. */
-  def bfsLabelProp(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val eRows = graft.SparkConfs.gateRows(e)
-    var (labels, labelRows) = seedState(seeds)
-    var changed = if (labelRows == 0) 0L else 1L
-    // same small-graph fast path as bfsFrom: labels broadcast per
-    // round already; the gate drops AQE's per-round stage jobs
-    graft.SparkConfs.maybeSmallLoop(edges.sparkSession, eRows + labelRows) {
-    while (changed > 0) {
-      // One heavy shuffle per round: broadcast labels into the edge
-      // join (edges never move), then merge old labels and relaxation
-      // candidates in a single map-side-combined min aggregation. The
-      // old dist rides along (tagged rows) so the convergence check is
-      // a cheap scan of the checkpointed result, not another join.
-      val relaxed = e
-        .join(maybeBroadcast(labels.select(col("vid").as("src"), col("dist")),
-          labelRows), Seq("src"))
-        .select(col("dst").as("vid"), (col("dist") + 1).as("d"),
-          lit(null).cast("int").as("old"))
-      val obs = new org.apache.spark.sql.Observation()
-      val merged = labels
-        .select(col("vid"), col("dist").as("d"), col("dist").as("old"))
-        .unionAll(relaxed)
-        .groupBy("vid").agg(min("d").as("newDist"), min("old").as("oldDist"))
-        .observe(obs, count(lit(1)).as("n"),
-          count(when(col("oldDist").isNull || col("newDist") < col("oldDist"), 1))
-            .as("changed"))
-      val mat = timed("bfsLabelProp round checkpoint")(
-        maybeInterpreted(labels, eRows + labelRows)(merged.localCheckpoint()))
-      labelRows = obs.get("n").asInstanceOf[Long]
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = mat.select(col("vid"), col("newDist").as("dist"))
-    }
-    }
-    labels
-  }
 
   /** `search` (T1): k-hop ego net distances from one (layer, nodeId)
     * seed. Returns (vid, dist) where dist = min hops in the requested
@@ -264,64 +203,25 @@ object Traversals {
     * (vid, component: string). Size thresholding
     * (`searcher.py:296-297`) composes on top via groupBy.
     *
-    * This is the engine's weak-components DEFAULT and it rides the
-    * O(log n)-round star-contraction kernel
-    * ([[weakComponentsLogRounds]]): the SccStress chain measurements
-    * showed both label-propagation kernels (GraphX min-label and the
-    * DataFrame loop) paying rounds = diameter, which a mega-diameter
-    * 100 TB graph cannot afford. The GraphX kernel survives as
-    * [[weakComponentsGraphX]] (spec-pinned equal on random graphs)
-    * for deployments that already hold the memoized projection. */
-  def weakComponents(g: OnionGraph): DataFrame =
-    weakComponentsLogRounds(g)
-
-  /** The pre-round-10 default: GraphX `connectedComponents` over the
-    * memoized directed projection (min-label propagation — Ω(diameter)
-    * rounds), relabeled to each component's lexicographic min
-    * "layer:nodeId". Same output contract as [[weakComponents]]. */
-  def weakComponentsGraphX(g: OnionGraph): DataFrame = {
-    val cc = GraphOps.connectedComponents(g)
-    val labels = g.vertices
-      .select(col("vid"), concat_ws(":", col("layer"), col("nodeId")).as("lbl"))
-    val compLabel = cc.join(labels, Seq("vid"))
-      .groupBy("compVid").agg(min("lbl").as("comp"))
-    cc.join(compLabel, Seq("compVid")).select(col("vid"), col("comp"))
-  }
-
-  /** Weak components in O(log n) ROUNDS regardless of diameter — the
-    * alternating large-star/small-star algorithm (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014).
-    * [[weakComponentsDataFrame]]'s min-label propagation needs
-    * Ω(diameter) rounds (a label crosses one edge per round) — the
-    * SccStress chain measurements show what that costs on
-    * mega-diameter graphs. Star contraction instead HALVES chain
-    * depth per round pair: large-star hangs every larger neighbor of
-    * u off min(Γ(u) ∪ {u}), small-star hangs u and its parents off
-    * their minimum, and the fixpoint is a star forest rooted at each
-    * component's min vid. Wholly deterministic (min-based, no
-    * ordering sensitivity), same output contract as
-    * [[weakComponents]]: (vid, comp) with comp = the component's
-    * lexicographic-min "layer:nodeId".
-    *
-    * Scale shape: each round is a groupBy + join on the 8-byte vid
-    * (same single-shuffle shape as the label loop) over an edge set
-    * that only SHRINKS (star edges collapse duplicates); rounds are
-    * O(log n) by the paper's potential argument, so a 100 TB graph
-    * with a pathological diameter pays tens of rounds, not millions.
-    * Convergence is checked exactly — a SINGLE symmetric-difference
-    * job per round (both rounds' edge sets are distinct by
-    * construction, so the sets are equal iff every (src,dst) key of
-    * their union appears exactly twice), replacing the two
-    * `except`-based anti-join passes the first cut paid — never
-    * probabilistically. */
-  def weakComponentsLogRounds(g: OnionGraph): DataFrame = {
+    * Rides the O(log n)-round star-contraction kernel
+    * [[componentsLogRoundsPairs]] — min-label propagation needs
+    * Ω(diameter) rounds (a label crosses one edge per round), which a
+    * mega-diameter 100 TB graph cannot afford (SCALE.md chain
+    * measurements). Isolated vertices are their own component. */
+  def weakComponents(g: OnionGraph): DataFrame = {
     val assign = componentsLogRoundsPairs(
         g.edges.select(col("src").as("a"), col("dst").as("b")))
       .select(col("id").as("vid"), col("comp").as("compVid"))
-    val cc = g.vertices.select("vid")
+    relabelToMinName(g, g.vertices.select("vid")
       .join(assign, Seq("vid"), "left")
       .select(col("vid"),
-        coalesce(col("compVid"), col("vid")).as("compVid"))
+        coalesce(col("compVid"), col("vid")).as("compVid")))
+  }
+
+  /** (vid, compVid) relabeled to each component's lexicographic-min
+    * member name "layer:nodeId" — the deterministic output contract
+    * of [[weakComponents]] and [[strongComponents]]. */
+  private def relabelToMinName(g: OnionGraph, cc: DataFrame): DataFrame = {
     val labels = g.vertices
       .select(col("vid"), concat_ws(":", col("layer"), col("nodeId")).as("lbl"))
     val compLabel = cc.join(labels, Seq("vid"))
@@ -329,14 +229,32 @@ object Traversals {
     cc.join(compLabel, Seq("compVid")).select(col("vid"), col("comp"))
   }
 
-  /** The star-contraction loop over a PLAIN pair list — the kernel
-    * [[weakComponentsLogRounds]] rides, exposed for any caller with
-    * (a, b) edges (the Leiden refinement scopes it per community).
+  /** Weak components in O(log n) ROUNDS regardless of diameter, over
+    * a plain (a, b) pair list — the one weak-components kernel:
+    * [[weakComponents]], [[graft.ext.Dedup.nearDupClusters]] and the
+    * Leiden refinement (scoped per community) all ride it. The
+    * alternating large-star/small-star algorithm (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014): star
+    * contraction HALVES chain depth per round pair — large-star hangs
+    * every larger neighbor of u off min(Γ(u) ∪ {u}), small-star hangs
+    * u and its parents off their minimum, and the fixpoint is a star
+    * forest rooted at each component's min id. Wholly deterministic
+    * (min-based, no ordering sensitivity).
+    *
     * Returns the converged star forest as (id, comp) with comp = the
     * component's MIN member id; roots and never-paired ids emit no
     * row (they are trivially their own component — callers coalesce).
-    * Same O(log n)-rounds / shrinking-edge-set scale shape as the
-    * graph-level entry point. */
+    *
+    * Scale shape: each round is a groupBy + join on the 8-byte id over
+    * an edge set that only SHRINKS (star edges collapse duplicates);
+    * rounds are O(log n) by the paper's potential argument, so a
+    * 100 TB graph with a pathological diameter pays tens of rounds,
+    * not millions. Convergence is checked exactly and for free: the
+    * large-star checkpoint counts the edges that keep the input from
+    * being a star forest, and a star forest is the fixpoint — so a
+    * round is two checkpoints with no check job of its own, and a
+    * pair list that already is a star forest (a matching, an
+    * assignment) pays one large-star round. */
   def componentsLogRoundsPairs(pairs: DataFrame): DataFrame = {
     // canonical (child, parent) with parent < child; self-loops drop
     val (pairs0, mE) = graft.SparkConfs.checkpointCounted(pairs
@@ -359,18 +277,13 @@ object Traversals {
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, 2 * mE) {
     var converged = mE == 0L
-    var rounds = 0
     while (!converged) {
-      rounds += 1
-      val e1 = largeStarRound(e, bc).localCheckpoint()
-      val e2 = smallStarRound(e1, bc).localCheckpoint()
-      // e and e2 are each duplicate-free, so |multiset union| grouped
-      // by key has count==2 everywhere iff e == e2: one shuffle + one
-      // isEmpty action, vs two full distinct-anti-join passes for the
-      // double `except` form.
-      converged = e.unionAll(e2).groupBy("src", "dst")
-        .agg(count(lit(1)).as("n")).filter(col("n") =!= 2).isEmpty
-      e = e2
+      val obs = new org.apache.spark.sql.Observation()
+      val e1 = largeStarRound(e, bc, obs).localCheckpoint()
+      // a star forest is the fixpoint of both rounds: stop on it
+      // before paying the small-star round
+      if (obs.get("unstarred").asInstanceOf[Long] == 0L) converged = true
+      else e = smallStarRound(e1, bc).localCheckpoint()
     }
     }
     e.select(col("src").as("id"), col("dst").as("comp"))
@@ -378,13 +291,23 @@ object Traversals {
 
   /** Large-star: per node u over the symmetrized neighborhood, hang
     * every strictly-larger neighbor on m(u) = min(Γ(u) ∪ {u}).
-    * Output stays canonical (parent < child). */
-  private def largeStarRound(e: DataFrame,
-                             bc: DataFrame => DataFrame): DataFrame = {
+    * Output stays canonical (parent < child). `obs` receives
+    * "unstarred": the neighbor rows that show `e` is not yet a star
+    * forest — a node with both a smaller and a larger neighbor (a
+    * child that is also a parent), or a second smaller neighbor (two
+    * parents). Zero means every node is a root or a child of exactly
+    * one root, and the root, smaller than its children, is its
+    * component's min. */
+  private def largeStarRound(e: DataFrame, bc: DataFrame => DataFrame,
+                             obs: org.apache.spark.sql.Observation): DataFrame = {
     val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
     val m = sym.groupBy("src").agg(min("dst").as("mn"))
       .select(col("src"), least(col("mn"), col("src")).as("m"))
     sym.join(bc(m), Seq("src"))
+      .observe(obs, count(when(
+        (col("m") < col("src") && col("dst") > col("src")) ||
+          (col("dst") < col("src") && col("dst") =!= col("m")), 1))
+        .as("unstarred"))
       .filter(col("dst") > col("src"))
       .select(col("dst").as("src"), col("m").as("dst"))
       .filter(col("src") =!= col("dst"))
@@ -402,49 +325,6 @@ object Traversals {
         .select(col("dst").as("src"), col("m").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
-  }
-
-  /** DataFrame-native min-label propagation — the fallback
-    * weak-components path for deployments that exclude GraphX; same
-    * output contract as [[weakComponents]]. */
-  def weakComponentsDataFrame(g: OnionGraph): DataFrame = {
-    // plain union, no dedup: duplicate (src,dst) rows cannot change a
-    // min-label fixpoint, and the dropDuplicates shuffle is pure cost
-    val e = g.edges.select("src", "dst")
-      .unionAll(g.edges.select(col("dst").as("src"), col("src").as("dst")))
-    val eRows = e.count()
-    var labels = g.vertices
-      .select(col("vid"), concat_ws(":", col("layer"), col("nodeId")).as("comp"))
-      .localCheckpoint()
-    var labelRows = labels.count()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0) {
-      iter += 1
-      // Same single-shuffle round shape as [[bfsLabelProp]]: broadcast
-      // labels into the edge join, merge via union + min agg, detect
-      // change from the tagged old label (min over strings: the old
-      // tag is the row's own comp, so newComp < oldComp iff a smaller
-      // neighbor label arrived).
-      val nbr = e
-        .join(maybeBroadcast(labels.select(col("vid").as("src"), col("comp")),
-          labelRows), Seq("src"))
-        .select(col("dst").as("vid"), col("comp").as("c"),
-          lit(null).cast("string").as("old"))
-      val merged = labels
-        .select(col("vid"), col("comp").as("c"), col("comp").as("old"))
-        .unionAll(nbr)
-        .groupBy("vid").agg(min("c").as("newComp"), min("old").as("oldComp"))
-      val obs = new org.apache.spark.sql.Observation()
-      val mat = timed(s"weakComponents round $iter checkpoint")(
-        maybeInterpreted(labels, eRows + labelRows)(
-          merged.observe(obs,
-            count(when(col("newComp") < col("oldComp"), 1)).as("changed"))
-            .localCheckpoint()))
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = mat.select(col("vid"), col("newComp").as("comp"))
-    }
-    labels
   }
 
   /** Strongly connected components as a pure DataFrame pipeline — the
@@ -469,12 +349,12 @@ object Traversals {
     *     SCC(r) (any v→…→r path from v ∈ SCC(r) stays inside the SCC,
     *     so the color restriction loses nothing).
     *
-    * Every round is the single-shuffle label-prop shape of
-    * [[bfsLabelProp]] with O(V) state — no pair-state, no GraphX
-    * runtime. Rounds per phase are bounded by the remaining diameter;
-    * outer passes by the color-peeling depth (1 for any DAG;
-    * pathological SCC-chain graphs degrade the same way GraphX SCC
-    * does). Returns (vid, compVid) with compVid = max vid of the SCC —
+    * Every round is a single-shuffle label-prop (labels ⋈ edges,
+    * union with the old labels, max-agg) with O(V) state — no
+    * pair-state, no GraphX runtime. Rounds per phase are bounded by
+    * the remaining diameter; outer passes by the color-peeling depth
+    * (1 for any DAG; pathological SCC-chain graphs degrade the same
+    * way GraphX SCC does). Returns (vid, compVid) with compVid = max vid of the SCC —
     * callers relabel to names like [[weakComponents]]. */
   def strongComponentsDataFrame(g: OnionGraph): DataFrame =
       graft.SparkConfs.withoutConstraintPropagation(g.spark) {
@@ -498,7 +378,7 @@ object Traversals {
         .join(nodes.select(col("vid").as("dst")), Seq("dst"), "left_semi")
         .localCheckpoint()
     }
-    maybeInterpreted(nodes, eRows + nodeCount) {
+    graft.SparkConfs.maybeInterpreted(spark, eRows + nodeCount) {
       while (nodeCount > 0) {
         // ---- 1. trim trivial SCCs to fixpoint
         var trimming = true
@@ -586,14 +466,8 @@ object Traversals {
   /** [[strongComponentsDataFrame]] relabeled to the lexicographic-min
     * member name per component — same deterministic output contract as
     * [[weakComponents]]. */
-  def strongComponents(g: OnionGraph): DataFrame = {
-    val scc = strongComponentsDataFrame(g)
-    val labels = g.vertices
-      .select(col("vid"), concat_ws(":", col("layer"), col("nodeId")).as("lbl"))
-    val compLabel = scc.join(labels, Seq("vid"))
-      .groupBy("compVid").agg(min("lbl").as("comp"))
-    scc.join(compLabel, Seq("compVid")).select(col("vid"), col("comp"))
-  }
+  def strongComponents(g: OnionGraph): DataFrame =
+    relabelToMinName(g, strongComponentsDataFrame(g))
 
   /** Component-size histogram with threshold — the reference's one
     * true group-by aggregation (`searcher.py:296-297`). */

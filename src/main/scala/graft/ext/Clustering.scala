@@ -68,7 +68,7 @@ object Clustering {
     * assignment ~ n·cells (every vector scores every centroid) — so
     * the total a·n²/cells + b·n·cells is minimized at cells ∝ √n,
     * giving O(n^1.5) overall. Both mis-scalings are MEASURED
-    * (SCALE.md BenchCuration): any FIXED cell count makes pairing
+    * (SCALE.md curation decade): any FIXED cell count makes pairing
     * quadratic (×5.6 at ×10 data), and cells ∝ n makes the kmeans
     * leg quadratic instead (17.2 s vs 6.2 s at ×10 under an n/128
     * rule). This is the DEFAULT for [[graft.ext.Dedup.semanticDedup]]

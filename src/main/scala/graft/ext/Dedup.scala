@@ -75,16 +75,6 @@ object Dedup {
         arr => xxhash64((1 to w).map(o => element_at(arr, o)): _*)))))
   }
 
-  /** MinHash signature: k minima of seeded hashes over the shingle
-    * set. Strings are hashed ONCE (the expensive part); the k seeded
-    * variants then re-mix the resulting longs — k cheap passes instead
-    * of k string-hash passes. All codegen'd. */
-  def minhashSignature(text: Column, k: Int = 32, w: Int = 3): Column = {
-    val hashed = hashedShingles(text, w)
-    array((0 until k).map(s =>
-      array_min(transform(hashed, h => xxhash64(h, lit(s))))): _*)
-  }
-
   /** MinHash + LSH near-dup candidates: signatures banded into
     * `bands` buckets; docs sharing any (band, bandHash) bucket are
     * candidates; candidates verified with exact shingle Jaccard.
@@ -948,69 +938,49 @@ object Dedup {
   }
 
   /** Near-dup CLUSTERS from a pair list: connected components of the
-    * undirected (a, b) similarity graph via min-label propagation,
-    * labeled by each component's min doc id. The canonicalization step
-    * every near-dup pipeline needs after candidate scoring — "keep one
-    * doc per cluster" is `filter(is_canonical)`. Docs that appear in
+    * undirected (a, b) similarity graph, labeled by each component's
+    * min doc id. The canonicalization step every near-dup pipeline
+    * needs after candidate scoring — "keep one doc per cluster" is
+    * `filter(is_canonical)`. Every doc named in a pair gets a row (a
+    * self-pair (a, a) alone yields (a, a, true)); docs that appear in
     * no pair are singletons and emit no row (they are trivially their
     * own canonical). Returns (doc_id, cluster, is_canonical).
     *
-    * Scale shape: the loop state is (doc_id, label) for PAIRED docs
-    * only — near-dup graphs are tiny relative to the corpus, so each
-    * round is a broadcast-joined label relax, rounds = component
-    * diameter (near-dup clusters are dense; diameters stay small). */
+    * Scale shape: the components come from the star-contraction
+    * kernel [[graft.algos.Traversals.componentsLogRoundsPairs]] over
+    * the PAIR graph only — O(log n) rounds whatever the cluster
+    * diameter, each a groupBy + join on the 8-byte id over an edge
+    * set that only shrinks; the pairs are materialized once, and the
+    * forest joins back onto their distinct endpoints (broadcast while
+    * they are few). */
   def nearDupClusters(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(col("a"), col("b"))
-      .unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
-    var labels = e.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint()
-    var changed = 1L
-    // small-graph fast path (the dagLevels/bfsLabelProp pattern): the
-    // label table is id-sized — broadcast it into the pair join under
-    // the gate and skip AQE's per-round stage jobs; big pair graphs
-    // keep the adaptive path
-    val eRows = e.count()
-    // the broadcast side (the label table) is ID-sized: gate the hint
-    // on the already-known distinct-id count, the conf gate on the
-    // per-round pair work
-    val small = labels.count() < graft.SparkConfs.SmallLoopRows
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, 2 * eRows) {
-    while (changed > 0) {
-      // same single-shuffle round shape as the graph layer's
-      // weakComponentsDataFrame: neighbor labels + own label, min-agg,
-      // change detection rides the checkpoint action via observe()
-      val nbr = e.join(bc(labels.withColumnRenamed("id", "a")
-          .withColumnRenamed("lbl", "c")), Seq("a"))
-        .select(col("b").as("id"), col("c"),
-          lit(null).cast("long").as("old"))
-      val obs = new org.apache.spark.sql.Observation()
-      val merged = labels
-        .select(col("id"), col("lbl").as("c"), col("lbl").as("old"))
-        .unionAll(nbr)
-        .groupBy("id").agg(min("c").as("newLbl"), min("old").as("oldLbl"))
-        .observe(obs, count(when(col("newLbl") < col("oldLbl"), 1)).as("changed"))
+    val (raw, rows) = graft.SparkConfs.checkpointCounted(
+      pairs.select(col("a"), col("b")))
+    val forest = graft.algos.Traversals.componentsLogRoundsPairs(raw)
+      .select(col("id").as("doc_id"), col("comp"))
+    // the kernel's own gates: 2·rows bounds the endpoint count
+    val small = 2 * rows < graft.SparkConfs.SmallLoopRows
+    val cl = graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, 2 * rows) {
+      raw.select(col("a").as("doc_id"))
+        .unionAll(raw.select(col("b").as("doc_id"))).distinct()
+        .join(if (small) broadcast(forest) else forest, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster"))
         .localCheckpoint()
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = merged.select(col("id"), col("newLbl").as("lbl"))
     }
-    }
-    labels.select(col("id").as("doc_id"), col("lbl").as("cluster"),
-      (col("id") === col("lbl")).as("is_canonical"))
+    cl.select(col("doc_id"), col("cluster"),
+      (col("doc_id") === col("cluster")).as("is_canonical"))
   }
 
   /** Fold NEW near-dup pairs (a [[probeBandIndex]] batch result) into
     * an existing [[nearDupClusters]] assignment WITHOUT revisiting the
     * original pair graph — the clustering leg of the daily-increment
     * loop. The member→canonical assignment rows are themselves edges
-    * that connect exactly the old components, so label-prop over
+    * that connect exactly the old components, so clustering
     * (assignment edges ∪ new pairs) yields the components of
-    * (old pairs ∪ new pairs) — and the old edges are STAR-shaped
-    * (every member one hop from its canonical), so convergence takes
-    * ~3 rounds regardless of how deep the original pair graph's
-    * diameter was: state is one row per previously-paired doc, cost is
-    * O(assignments + new pairs), never O(original pairs). Min-id
+    * (old pairs ∪ new pairs) — and the old edges are already a star
+    * forest (every member one hop from its canonical): state is one
+    * row per previously-paired doc, cost is O(assignments + new
+    * pairs), never O(original pairs). Min-id
     * canonicals are preserved because each old label is the component
     * minimum and a member of it. Equals a from-scratch re-cluster of
     * the union (spec-pinned; x46 hash-matches the full-closure DuckDB

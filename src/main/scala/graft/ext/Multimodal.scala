@@ -1497,11 +1497,6 @@ object Multimodal {
       .withColumn("ok_ppm", expr("n_ok * 1000000 DIV n"))
   }
 
-  /** "Resize" stage stub: metadata-only transform (target dims recorded,
-    * payload passed through) — exercises the schema evolution path. */
-  def resizeStub(media: DataFrame, w: Int, h: Int): DataFrame =
-    media.withColumn("width", lit(w)).withColumn("height", lit(h))
-
   /** Frame-sampling stub for video rows: emit `n` frame stubs per
     * media row via posexplode — the real generator shape (row ->
     * frames) with a fake payload slice per frame. */

@@ -156,22 +156,6 @@ object EventStreams {
         date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
         col("user_id"), col("n_events"), col("sum_value"))
 
-  /** Stream dedup by event_id within the watermark horizon —
-    * exactly-once-style ingestion hygiene at scale.
-    *
-    * `dropDuplicatesWithinWatermark`, NOT `dropDuplicates`: plain
-    * dropDuplicates only evicts dedup state when the event-time column
-    * is itself one of the dedup keys, so keying on event_id alone
-    * would grow state without bound on an unbounded stream. The
-    * WithinWatermark variant expires each key once the watermark
-    * passes its first-seen event time — bounded state, and duplicates
-    * whose retries carry slightly different timestamps still collapse. */
-  def streamDedup(spark: SparkSession, path: String,
-                  watermark: String = "10 minutes"): DataFrame =
-    readEventStream(spark, path)
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Stream-stream interval join: pair each probe-side event with the
     * build-side events of the same key in the preceding `lookback`.
     * Watermarks on BOTH inputs + the time-range join condition are

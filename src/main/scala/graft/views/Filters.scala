@@ -1,7 +1,7 @@
 package graft.views
 
 import graft.model.OnionGraph
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
@@ -63,9 +63,4 @@ object Filters {
     * (`searcher.py:383-389`). */
   def composeAnd(preds: Seq[Column]): Column = preds.reduce(_ && _)
   def composeOr(preds: Seq[Column]): Column = preds.reduce(_ || _)
-
-  /** F2 "return_prop" variant: materialize the composed predicate as a
-    * boolean property column instead of filtering. */
-  def withPredicateProp(df: DataFrame, name: String, pred: Column): DataFrame =
-    df.withColumn(name, coalesce(pred, lit(false)))
 }

@@ -321,6 +321,29 @@ class ExtSpec extends SparkSuite {
       5L -> (5L, true), 6L -> (5L, false)))
   }
 
+  test("nearDupClusters: a 256-link chain clusters in O(log n) rounds, not one job per hop (X1)") {
+    // chain 0-1-…-256 in shuffled order, a self-pair and an isolated pair
+    val chain = scala.util.Random.shuffle(
+      (0L until 256L).map(i => (i, i + 1))).toList
+    val pairs = chain ++ Seq((1000L, 1000L), (2000L, 2001L))
+    val (out, log) = JobLog(spark) {
+      Dedup.nearDupClusters(pairs.toDF("a", "b"))
+        .as[(Long, Long, Boolean)].collect()
+    }
+    val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    val expected = UnionFind.minLabels(ids, pairs)
+    assert(out.toSet == expected.map { case (id, c) => (id, c, id == c) }.toSet)
+    assert(out.length == ids.size)
+    // measured 48 jobs, from the star-contraction kernel
+    // (Traversals.componentsLogRoundsPairs): 9 large-star rounds (a
+    // checkpoint and two broadcast jobs each) and 8 small-star rounds
+    // (a checkpoint and a broadcast), plus the two pair checkpoints,
+    // the forest's broadcast, the result checkpoint and the collect.
+    // Label propagation paid at least one checkpoint per chain hop.
+    assert(log.jobs.size <= 100,
+      s"${log.jobs.size} jobs:\n${log.jobs.mkString("\n")}")
+  }
+
   test("sourceOverlap: identical sources jaccard 1, disjoint 0, estimator exact below capacity") {
     // sources A and B share exactly one of two shingle-sets; C is
     // disjoint from both; D duplicates A verbatim

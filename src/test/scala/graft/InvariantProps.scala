@@ -54,23 +54,21 @@ object InvariantProps extends Properties("GraftInvariants") {
       comps.count() == n && comps.select("vid").distinct().count() == n
     }
 
-  property("GraphX and DataFrame weak components agree exactly") =
+  property("weak components agree exactly with a driver union-find") =
     forAll(genGraph) { case (n, edges) =>
       val g = build(n, edges)
       val a = Traversals.weakComponents(g)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val b = Traversals.weakComponentsDataFrame(g)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      a == b
+      a == UnionFind.weakComponents(g)
     }
 
-  property("frontier BFS and label-propagation BFS agree exactly") =
+  property("frontier BFS and Pregel BFS agree exactly") =
     forAll(genGraph) { case (n, edges) =>
       val g = build(n, edges)
       val seed = g.vertices.orderBy("vid").limit(1).select("vid")
       val a = Traversals.bfsFrom(g.edges, seed, -1)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val b = Traversals.bfsLabelProp(g.edges, seed)
+      val b = graft.algos.GraphOps.pregelBfsSeeds(g, seed)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       a == b
     }
@@ -102,22 +100,11 @@ object InvariantProps extends Properties("GraftInvariants") {
       pairs.isEmpty || {
         val out = Dedup.nearDupClusters(pairs.toDF("a", "b")).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-        // driver-side union-find ground truth
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        pairs.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val expected = parent.keys.map(x => x -> find(x)).toMap
-        // cluster labels must be each component's MIN member id
-        val minOf = expected.groupBy(_._2).map { case (root, m) =>
-          root -> m.keys.min }
-        out.toSet == expected.map { case (id, root) =>
-          (id, minOf(root), id == minOf(root)) }.toSet
+        // driver-side union-find ground truth: cluster labels must be
+        // each component's MIN member id
+        val expected = UnionFind.minLabels(
+          pairs.flatMap(p => Seq(p._1, p._2)), pairs)
+        out.toSet == expected.map { case (id, c) => (id, c, id == c) }.toSet
       }
     }
 

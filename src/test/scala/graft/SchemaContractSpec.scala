@@ -151,4 +151,12 @@ class SchemaContractSpec extends SparkSuite {
       assert(df.count() > 0, s"$n returned no rows against $sfDir")
     }
   }
+
+  test("the corpus surface: SparkEntry.defs holds exactly 298 distinct queries") {
+    // a kernel deletion must not silently drop a corpus query
+    val names = SparkEntry.defs.map(_.name)
+    assert(names.size == 298, s"${names.size} query defs")
+    assert(names.distinct.size == names.size,
+      s"duplicate names: ${names.diff(names.distinct).distinct}")
+  }
 }

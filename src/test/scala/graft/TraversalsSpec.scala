@@ -233,46 +233,58 @@ class TraversalsSpec extends SparkSuite {
       Set("a", "b", "c"), Set("p", "q", "r"), Set("t"), Set("s")))
   }
 
+  private def wccRandom(seed: Int, m: Int, n: Int,
+                        extra: Seq[String]): graft.model.OnionGraph = {
+    val rnd = new scala.util.Random(seed)
+    val es = (1 to m).map(_ =>
+      ("n" + rnd.nextInt(n), "n" + rnd.nextInt(n)))
+      .filter(e => e._1 != e._2).distinct
+    graphOf(es, extra)
+  }
+
+  private def wccMap(df: org.apache.spark.sql.DataFrame): Map[Long, String] =
+    df.as[(Long, String)].collect().toMap
+
   test("weakComponentsLogRounds == label-prop kernel on random graphs + chains") {
-    // the O(log n)-round star-contraction kernel must produce the
-    // SAME (vid, comp) map as min-label propagation — including on
-    // the long chain where their round counts diverge most
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, String)].collect().toMap
+    // weakComponents is the O(log n)-round star-contraction kernel; its
+    // (vid, comp) map must equal min-label propagation's fixpoint (every
+    // vertex labeled with its component's min "layer:nodeId"), computed
+    // here by the driver union-find — including on the long chain,
+    // where label propagation would need one round per link
     for (seed <- Seq(71, 72)) {
-      val rnd = new scala.util.Random(seed)
-      val es = (1 to 40).map(_ =>
-        ("n" + rnd.nextInt(25), "n" + rnd.nextInt(25)))
-        .filter(e => e._1 != e._2).distinct
-      val g2 = graphOf(es, Seq("iso1", "iso2"))
-      assert(asMap(Traversals.weakComponentsLogRounds(g2))
-        == asMap(Traversals.weakComponentsDataFrame(g2)), s"seed=$seed")
+      val g2 = wccRandom(seed, 40, 25, Seq("iso1", "iso2"))
+      assert(wccMap(Traversals.weakComponents(g2))
+        == UnionFind.weakComponents(g2), s"seed=$seed")
     }
     // 60-link chain: one component labeled by the lexicographic min
     val chain = graphOf((0 until 60).map(i => (s"v$i", s"v${i + 1}")))
-    val got = asMap(Traversals.weakComponentsLogRounds(chain))
+    val got = wccMap(Traversals.weakComponents(chain))
     assert(got.values.toSet == Set("L:v0"))
     assert(got.size == 61)
+    assert(got == UnionFind.weakComponents(chain))
     // edge-free graph: everyone their own component
     val iso = graphOf(Nil, Seq("a", "b"))
-    assert(asMap(Traversals.weakComponentsLogRounds(iso))
+    assert(wccMap(Traversals.weakComponents(iso))
       .values.toSet == Set("L:a", "L:b"))
   }
 
   test("weakComponents default == GraphX kernel (round-10 reroute pin)") {
-    // weakComponents now rides the log-round star-contraction kernel;
-    // the GraphX min-label path survives as weakComponentsGraphX and
-    // must keep producing the identical (vid, comp) assignment
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, String)].collect().toMap
+    // GraphX's own connectedComponents, relabeled to each component's
+    // min "layer:nodeId", must give the identical (vid, comp) map; the
+    // driver union-find must agree with both
     for (seed <- Seq(73, 74)) {
-      val rnd = new scala.util.Random(seed)
-      val es = (1 to 50).map(_ =>
-        ("n" + rnd.nextInt(30), "n" + rnd.nextInt(30)))
-        .filter(e => e._1 != e._2).distinct
-      val g2 = graphOf(es, Seq("alone"))
-      assert(asMap(Traversals.weakComponents(g2))
-        == asMap(Traversals.weakComponentsGraphX(g2)), s"seed=$seed")
+      val g2 = wccRandom(seed, 50, 30, Seq("alone"))
+      val lbl = g2.vertices
+        .select(col("vid"), concat_ws(":", col("layer"), col("nodeId")))
+        .as[(Long, String)].collect().toMap
+      val gxComp = graft.algos.GraphOps.toGraphX(g2).connectedComponents()
+        .vertices.collect().toMap
+      val minName = lbl.keys.groupBy(gxComp).map { case (c, vs) =>
+        c -> vs.map(lbl).min }
+      val gx = lbl.keys.map(v => v -> minName(gxComp(v))).toMap
+      val got = wccMap(Traversals.weakComponents(g2))
+      assert(got == gx, s"seed=$seed")
+      assert(got == UnionFind.weakComponents(g2), s"seed=$seed (union-find)")
     }
   }
 
