@@ -206,14 +206,13 @@ object SparkConfs {
     * attribute) for join-derived inputs. Constraint propagation only
     * infers extra filters — losing it inside a bounded loop costs
     * nothing measurable, and every checkpoint the loop takes
-    * materializes inside this scope. */
+    * materializes inside this scope. Depth-counted like the other
+    * [[scopedConfs]] flips, so overlapping scopes on one session
+    * restore the session's own value once the last one exits. */
   def withoutConstraintPropagation[A](spark: org.apache.spark.sql.SparkSession)
-                                     (body: => A): A = {
-    val key = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
+                                     (body: => A): A =
+    scopedConfs(spark, "noconstraint",
+      Map("spark.sql.constraintPropagation.enabled" -> "false"))(body)
 
   def kryoGraphConf(): SparkConf = {
     val conf = new SparkConf()

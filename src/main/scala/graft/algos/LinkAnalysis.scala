@@ -31,14 +31,6 @@ import org.apache.spark.sql.functions._
  */
 object LinkAnalysis {
 
-  /** n² upper bound on the (src, node) pair state of a multi-source
-    * BFS — the per-round work estimate for the small-round codegen
-    * gate (overflow-safe). */
-  private def pairStateBound(nodes: DataFrame): Long = {
-    val n = nodes.count()
-    if (n > 3000000L) Long.MaxValue else n * n
-  }
-
   /** Distinct (group, item) membership list — the shared input of
     * every co-occurrence operator. Checkpointed because it feeds at
     * least two join sides downstream (the dedup shuffle is the
@@ -185,12 +177,62 @@ object LinkAnalysis {
           .as("assortativity"))
   }
 
+  /** Undirected projection of an edge list (a, b), deduplicated and
+    * EAGERLY checkpointed: the round loops' lazy checkpoints must start
+    * from clean LogicalRDDs, or Dataset.checkpoint's attribute mapping
+    * trips over the input's deduplicated join attributes. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("a"), col("b"))
+      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
+      .distinct()
+      .localCheckpoint()
+
+  /** The one multi-source BFS of [[harmonicCentrality]],
+    * [[betweenness]] and [[betweennessPivots]]: each round advances
+    * every source's frontier (`sources.node`) through one join on the
+    * node key; a node first reached at round d gets σ = Σ σ(its
+    * predecessors at d-1), its shortest-path count. `gateBound` maps
+    * the source count (observed on the state-0 checkpoint) to the
+    * codegen gate's work estimate. Returns the checkpointed
+    * (src, node, dist, sigma) table and its row count. */
+  private def sigmaBfs(und: DataFrame, sources: DataFrame, maxDepth: Int,
+                       gateBound: Long => Long): (DataFrame, Long) =
+      graft.SparkConfs.withoutConstraintPropagation(und.sparkSession) {
+    val (state0, n) = graft.SparkConfs.checkpointCounted(sources
+      .select(col("node").as("src"), col("node"), lit(0).as("dist"),
+        lit(1L).as("sigma")))
+    var state = state0
+    var frontier = state
+    graft.SparkConfs.maybeInterpreted(und.sparkSession, gateBound(n)) {
+      for (d <- 1 to maxDepth) {
+        val stepped = frontier.alias("f")
+          .join(und.alias("u"), col("f.node") === col("u.a"))
+          .select(col("f.src").as("src"), col("u.b").as("node"),
+            col("f.sigma").as("sigma"))
+        val fresh = stepped
+          .join(state.select("src", "node"), Seq("src", "node"), "left_anti")
+          .groupBy("src", "node")
+          .agg(sum("sigma").as("sigma"))
+          .select(col("src"), col("node"), lit(d).as("dist"), col("sigma"))
+          .localCheckpoint(eager = false)
+        state = state.unionAll(fresh).localCheckpoint(eager = false)
+        frontier = fresh
+      }
+      graft.SparkConfs.checkpointCounted(state)
+    }
+  }
+
+  /** n² upper bound on the (src, node) pair state of an all-sources
+    * [[sigmaBfs]] (overflow-safe). */
+  private def allPairsBound(n: Long): Long =
+    if (n > 3000000L) Long.MaxValue else n * n
+
   /** Closeness + harmonic centrality by multi-source BFS over the
     * undirected projection of an edge list (a, b): every node is its
-    * own source, each round advances all frontiers at once through one
-    * join on the node key. Output per node: `n_reached` (excluding
+    * own source, read off the shared [[sigmaBfs]] (its `dist` column;
+    * σ is ignored). Output per node: `n_reached` (excluding
     * self), `ecc` (eccentricity — max over eccentricities = diameter),
-    * self), `dist_sum`, `harmonic_q` = Σ floor(1e6 / d) (quantized so
+    * `dist_sum`, `harmonic_q` = Σ floor(1e6 / d) (quantized so
     * the sum is exact integer arithmetic on any engine), and
     * `closeness` = n_reached / dist_sum (the single float division).
     * Isolated nodes (nothing reached) are excluded.
@@ -201,39 +243,10 @@ object LinkAnalysis {
     * full-corpus centrality at 100 TB would switch to HyperBall-style
     * sketched neighborhood sizes (approximate, not oracle-checkable).
     */
-  def harmonicCentrality(edges: DataFrame, maxDepth: Int): DataFrame =
-      graft.SparkConfs.withoutConstraintPropagation(edges.sparkSession) {
-    // EAGER pre-loop checkpoints: the loop's lazy checkpoints must
-    // start from clean LogicalRDDs — deferring these into the first
-    // round's materialization makes Dataset.checkpoint's attribute
-    // mapping trip over the input plan's deduplicated join attributes
-    // (NoSuchElementException on an upstream exprId).
-    val und = edges.select(col("a"), col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    val nodes = und.select(col("a").as("node")).distinct()
-    var state = nodes
-      .select(col("node").as("src"), col("node"), lit(0).as("dist"))
-      .localCheckpoint()
-    var frontier = state
-    // pair-state upper bound drives the small-round codegen gate
-    val pairBound = pairStateBound(nodes)
-    graft.SparkConfs.maybeInterpreted(edges.sparkSession, pairBound) {
-      for (d <- 1 to maxDepth) {
-        val stepped = frontier.alias("f")
-          .join(und.alias("u"), col("f.node") === col("u.a"))
-          .select(col("f.src").as("src"), col("u.b").as("node"),
-            lit(d).as("dist"))
-          .distinct()
-        val fresh = stepped
-          .join(state.select("src", "node"), Seq("src", "node"), "left_anti")
-          .localCheckpoint(eager = false)
-        state = state.unionAll(fresh).localCheckpoint(eager = false)
-        frontier = fresh
-      }
-      state = state.localCheckpoint()
-    }
+  def harmonicCentrality(edges: DataFrame, maxDepth: Int): DataFrame = {
+    val und = undirected(edges)
+    val (state, _) = sigmaBfs(und, und.select(col("a").as("node")).distinct(),
+      maxDepth, allPairsBound)
     state.groupBy("src")
       .agg((count(lit(1)) - 1).as("n_reached"),
         sum("dist").as("dist_sum"),
@@ -251,12 +264,12 @@ object LinkAnalysis {
     * edge list — per node v: Σ over reachable pairs s < t (v strictly
     * interior) of σ(s,v)·σ(v,t)/σ(s,t), each pair fraction quantized
     * to floor(·×1e6) so the sum is exact integer arithmetic on any
-    * engine. Shortest-path counts come from a sigma-accumulating
-    * multi-source BFS: a node first reached at round d gets
-    * σ = Σ σ(predecessors at d-1) — the aggregated (scalable) form of
-    * path counting; an enumerate-all-walks formulation (what the
-    * DuckDB oracle does) agrees because a length-d(s,v) walk cannot
-    * revisit a vertex.
+    * engine. Shortest-path counts come from the shared [[sigmaBfs]]
+    * from every node, combined by [[combinePairs]]: a node first
+    * reached at round d gets σ = Σ σ(predecessors at d-1) — the
+    * aggregated (scalable) form of path counting; an enumerate-all-walks
+    * formulation (what the DuckDB oracle does) agrees because a
+    * length-d(s,v) walk cannot revisit a vertex.
     *
     * Scale: pair-state (src, node) like [[harmonicCentrality]] — meant
     * for bounded slices; the pair-combination join is the dominant
@@ -264,56 +277,40 @@ object LinkAnalysis {
     * quantizer bounds usable σ at ~3e6 paths per pair (document
     * diameter/multiplicity accordingly). Nodes with zero betweenness
     * are omitted. */
-  def betweenness(edges: DataFrame, maxDepth: Int): DataFrame =
-      graft.SparkConfs.withoutConstraintPropagation(edges.sparkSession) {
-    val und = edges.select(col("a"), col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    val nodes = und.select(col("a").as("node")).distinct()
-    var state = nodes
-      .select(col("node").as("src"), col("node"), lit(0).as("dist"),
-        lit(1L).as("sigma"))
-      .localCheckpoint()
-    var frontier = state
-    val pairBound = pairStateBound(nodes)
-    graft.SparkConfs.maybeInterpreted(edges.sparkSession, pairBound) {
-      for (d <- 1 to maxDepth) {
-        val stepped = frontier.alias("f")
-          .join(und.alias("u"), col("f.node") === col("u.a"))
-          .select(col("f.src").as("src"), col("u.b").as("node"),
-            col("f.sigma").as("sigma"))
-        val fresh = stepped
-          .join(state.select("src", "node"), Seq("src", "node"), "left_anti")
-          .groupBy("src", "node")
-          .agg(sum("sigma").as("sigma"))
-          .select(col("src"), col("node"), lit(d).as("dist"), col("sigma"))
-          .localCheckpoint(eager = false)
-        state = state.unionAll(fresh).localCheckpoint(eager = false)
-        frontier = fresh
-      }
-      state = state.localCheckpoint()
-    }
-    val sp = state // (src, node, dist, sigma), materialized in the gate
+  def betweenness(edges: DataFrame, maxDepth: Int): DataFrame = {
+    val und = undirected(edges)
+    val (sp, spRows) = sigmaBfs(und,
+      und.select(col("a").as("node")).distinct(), maxDepth, allPairsBound)
+    combinePairs(sp, spRows, None)
+  }
+
+  /** Betweenness contributions from a [[sigmaBfs]] table `sp` (`spRows`
+    * rows): for every (s, t) pair with s < t — both ends in `pivots`
+    * when given — and every v strictly interior to one of their
+    * shortest paths, floor(σ(s,v)·σ(v,t)·1e6 / σ(s,t)), summed per v.
+    * Output (node, bc_q), zero rows omitted. */
+  private def combinePairs(sp: DataFrame, spRows: Long,
+                           pivots: Option[DataFrame]): DataFrame = {
     // the combination joins fan st out by component size; when the
     // shortest-path table is broadcast-small, hint it so both joins
     // stream map-side instead of sorting the n^3 intermediate
     // (measured 15s -> ~4s at sf0.1); past the threshold they fall
     // back to shuffled joins on (s) and (t, v)
-    val spRows = sp.count()
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (spRows < 2000000L) broadcast(df) else df
+    val small = spRows < 2000000L
+    def maybeBcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    // with pivots, src always is one; the semi-join pins node too
+    val pairs = sp.where(col("src") < col("node"))
+    val st0 = pivots.fold(pairs)(p => pairs.join(p, Seq("node"), "left_semi"))
+      .select(col("src").as("s"), col("node").as("t"),
+        col("dist").as("dst"), col("sigma").as("sigst"))
     // when both combination sides broadcast, the (s,t) stream side keeps
     // the BFS tail's AQE-coalesced partitioning (1-2 partitions at small
     // SF) and the n³ expansion runs single-threaded — spread it across
     // the cluster first (a pair-table-sized round-robin, trivial next to
     // the expansion it parallelizes; the >2M fallback path repartitions
     // through its own shuffled joins anyway)
-    val st0 = sp.where(col("src") < col("node"))
-      .select(col("src").as("s"), col("node").as("t"),
-        col("dist").as("dst"), col("sigma").as("sigst"))
-    val st = if (spRows < 2000000L)
-      st0.repartition(edges.sparkSession.sparkContext.defaultParallelism)
+    val st = if (small)
+      st0.repartition(sp.sparkSession.sparkContext.defaultParallelism)
     else st0
     val sv = maybeBcast(sp.select(col("src").as("s"), col("node").as("v"),
       col("dist").as("dsv"), col("sigma").as("sigsv")))
@@ -365,48 +362,9 @@ object LinkAnalysis {
     * column-compatible with [[harmonicCentrality]]'s exact forms.
     * ΔN(t) >= 0 always: register merges only shrink the k-th smallest
     * hash, so the estimate is monotone in t. */
-  def kmvCentrality(edges: DataFrame, maxDepth: Int, k: Int = 64): DataFrame =
-      graft.SparkConfs.withoutConstraintPropagation(edges.sparkSession) {
+  def kmvCentrality(edges: DataFrame, maxDepth: Int, k: Int = 64): DataFrame = {
     require(k > 1 && k <= 32767, "kmvCentrality: 1 < k <= 32767")
-    val und = edges.select(col("a"), col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    val nodes = und.select(col("a").as("node")).distinct()
-    // per-node KMV estimate of the current reached-set size: exact
-    // count below k, (k-1)*2^48 DIV v_k at capacity
-    def estimate(state: DataFrame): DataFrame =
-      state.groupBy("node").agg(count(lit(1)).as("cnt"), max("h").as("vk"))
-        .select(col("node"),
-          // greatest(vk,1): a node name hashing to 48 zero bits (p ~
-          // 2^-48 per node — nonzero over a 100 TB corpus) would make
-          // vk=0 and null the estimate; clamping keeps it total and
-          // the oracle applies the identical clamp
-          when(col("cnt") < k, col("cnt"))
-            .otherwise(expr(
-              s"CAST(${k - 1}L * 281474976710656L DIV greatest(vk, 1L) AS BIGINT)"))
-            .as("est"))
-    var state = nodes.select(col("node"), h48(col("node")).as("h"))
-      .localCheckpoint()
-    var ests = estimate(state).withColumn("t", lit(0))
-    // work bound for the small-round codegen gate: V·k state + edges
-    val stateBound = {
-      val n = nodes.count()
-      if (n > 300000000L) Long.MaxValue else n * k
-    }
-    graft.SparkConfs.maybeInterpreted(edges.sparkSession, stateBound) {
-      for (t <- 1 to maxDepth) {
-        val prop = state.alias("s")
-          .join(und.alias("u"), col("s.node") === col("u.a"))
-          .select(col("u.b").as("node"), col("s.h").as("h"))
-        val w = Window.partitionBy("node").orderBy("h")
-        state = state.unionAll(prop)
-          .distinct()
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= k).drop("rn")
-          .localCheckpoint()
-        ests = ests.unionAll(estimate(state).withColumn("t", lit(t)))
-      }
+    kmvBalls(edges, maxDepth, k) { ests =>
       // harmonic/closeness from per-round estimate deltas in ONE final
       // window + agg pass (no per-round driver state)
       val lagW = Window.partitionBy("node").orderBy("t")
@@ -423,48 +381,39 @@ object LinkAnalysis {
         .where(col("n_reached_est") > 0)
         .withColumn("closeness_est",
           col("n_reached_est").cast("double") / col("dist_sum_est"))
-        .localCheckpoint()
     }
   }
 
-  /** ANF neighborhood function + effective diameter over the same
-    * bottom-k KMV round engine as [[kmvCentrality]] (Palmer et al.'s
-    * ANF / HyperBall, reduced to the graph-level curve): N(t) =
-    * Σ_node (|ball(node, t)|−1) estimated per round, and the effective
-    * diameter is the smallest t whose N(t) reaches `ppmBar` (default
-    * 90%) of N(maxDepth) — the classic "90% of connected pairs" form.
-    * One row per t: (t, n_pairs_est, ppm_of_final,
-    * is_effective_diameter), all-integer (ppm by integer div), so the
-    * sketched curve hash-matches an oracle re-deriving the identical
-    * sketch contents.
-    *
-    * Scale shape: identical to [[kmvCentrality]] — O(V·k) state, one
-    * equi-join + per-node bottom-k per round; the curve collapses to
-    * maxDepth+1 rows before the (trivial) flag window. */
-  def effectiveDiameter(edges: DataFrame, maxDepth: Int, k: Int = 64,
-                        ppmBar: Long = 900000L): DataFrame =
+  /** The one bottom-k (KMV) ball engine of [[kmvCentrality]] and
+    * [[effectiveDiameter]]: per node the `k` smallest 48-bit hashes of
+    * its ball within distance t, advanced one hop per round by merging
+    * neighbor sketches. `readOut` maps the per-round estimates
+    * (node, est, t), t = 0 .. maxDepth, to the answer, checkpointed
+    * inside the kernel's scopes. */
+  private def kmvBalls(edges: DataFrame, maxDepth: Int, k: Int)
+                      (readOut: DataFrame => DataFrame): DataFrame =
       graft.SparkConfs.withoutConstraintPropagation(edges.sparkSession) {
-    require(k > 1 && k <= 32767, "effectiveDiameter: 1 < k <= 32767")
-    require(ppmBar >= 0 && ppmBar <= 1000000L, "ppmBar in [0, 1e6]")
-    val und = edges.select(col("a"), col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
-    val nodes = und.select(col("a").as("node")).distinct()
+    val und = undirected(edges)
+    // per-node KMV estimate of the current reached-set size: exact
+    // count below k, (k-1)*2^48 DIV v_k at capacity
     def estimate(state: DataFrame): DataFrame =
       state.groupBy("node").agg(count(lit(1)).as("cnt"), max("h").as("vk"))
         .select(col("node"),
+          // greatest(vk,1): a node name hashing to 48 zero bits (p ~
+          // 2^-48 per node — nonzero over a 100 TB corpus) would make
+          // vk=0 and null the estimate; clamping keeps it total and
+          // the oracle applies the identical clamp
           when(col("cnt") < k, col("cnt"))
             .otherwise(expr(
               s"CAST(${k - 1}L * 281474976710656L DIV greatest(vk, 1L) AS BIGINT)"))
             .as("est"))
-    var state = nodes.select(col("node"), h48(col("node")).as("h"))
-      .localCheckpoint()
+    val (state0, n) = graft.SparkConfs.checkpointCounted(
+      und.select(col("a").as("node")).distinct()
+        .select(col("node"), h48(col("node")).as("h")))
+    var state = state0
     var ests = estimate(state).withColumn("t", lit(0))
-    val stateBound = {
-      val n = nodes.count()
-      if (n > 300000000L) Long.MaxValue else n * k
-    }
+    // work bound for the small-round codegen gate: V·k state + edges
+    val stateBound = if (n > 300000000L) Long.MaxValue else n * k
     graft.SparkConfs.maybeInterpreted(edges.sparkSession, stateBound) {
       for (t <- 1 to maxDepth) {
         val prop = state.alias("s")
@@ -478,6 +427,29 @@ object LinkAnalysis {
           .localCheckpoint()
         ests = ests.unionAll(estimate(state).withColumn("t", lit(t)))
       }
+      readOut(ests).localCheckpoint()
+    }
+  }
+
+  /** ANF neighborhood function + effective diameter, read off the
+    * shared KMV ball engine [[kmvBalls]] (Palmer et al.'s
+    * ANF / HyperBall, reduced to the graph-level curve): N(t) =
+    * Σ_node (|ball(node, t)|−1) estimated per round, and the effective
+    * diameter is the smallest t whose N(t) reaches `ppmBar` (default
+    * 90%) of N(maxDepth) — the classic "90% of connected pairs" form.
+    * One row per t: (t, n_pairs_est, ppm_of_final,
+    * is_effective_diameter), all-integer (ppm by integer div), so the
+    * sketched curve hash-matches an oracle re-deriving the identical
+    * sketch contents.
+    *
+    * Scale shape: the engine's — O(V·k) state, one equi-join +
+    * per-node bottom-k per round; the curve collapses to maxDepth+1
+    * rows before the (trivial) flag window. */
+  def effectiveDiameter(edges: DataFrame, maxDepth: Int, k: Int = 64,
+                        ppmBar: Long = 900000L): DataFrame = {
+    require(k > 1 && k <= 32767, "effectiveDiameter: 1 < k <= 32767")
+    require(ppmBar >= 0 && ppmBar <= 1000000L, "ppmBar in [0, 1e6]")
+    kmvBalls(edges, maxDepth, k) { ests =>
       val nf = ests.groupBy("t")
         .agg(sum(col("est") - 1).cast("long").as("n_pairs_est"))
       val fin = nf.where(col("t") === maxDepth)
@@ -491,7 +463,6 @@ object LinkAnalysis {
           col("rb") && !coalesce(lag(col("rb"), 1).over(flagW), lit(false)))
         .select(col("t"), col("n_pairs_est"), col("ppm_of_final"),
           col("is_effective_diameter"))
-        .localCheckpoint()
     }
   }
 
@@ -501,82 +472,27 @@ object LinkAnalysis {
     * pairs — deterministic, content-keyed, and re-derivable by any
     * engine, so a fixed pivot set hash-matches the DuckDB oracle
     * (the Brandes-Pich 2007 pivot strategy, with hash order standing
-    * in for their RNG). The sigma BFS runs from pivot sources only
-    * (state O(m·V)) and the pair combination restricts (s, t) to pivot
-    * pairs (combine O(m²·V)) — both scale with the SAMPLE, not the
-    * graph. With numPivots >= |V| this degenerates to exactly
+    * in for their RNG). The shared [[sigmaBfs]] runs from the pivot
+    * sources only (state O(m·V)) and [[combinePairs]] restricts (s, t)
+    * to pivot pairs (combine O(m²·V)) — both scale with the SAMPLE,
+    * not the graph. With numPivots >= |V| this degenerates to exactly
     * [[betweenness]] (spec-pinned). Same quantized-contribution
     * output contract: (node, bc_q) over pivot pairs, zero rows
     * omitted. */
   def betweennessPivots(edges: DataFrame, maxDepth: Int,
-                        numPivots: Int): DataFrame =
-      graft.SparkConfs.withoutConstraintPropagation(edges.sparkSession) {
+                        numPivots: Int): DataFrame = {
     require(numPivots > 1, "betweennessPivots: numPivots > 1")
-    val und = edges.select(col("a"), col("b"))
-      .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint()
+    val und = undirected(edges)
     val nodes = und.select(col("a").as("node")).distinct()
     // distributed top-m (sort + limit plans as TakeOrdered — no global
     // row_number sort), ties broken on the name for determinism
     val pivots = nodes.withColumn("h", h48(col("node")))
       .orderBy(col("h"), col("node")).limit(numPivots)
       .select("node").localCheckpoint()
-    var state = pivots
-      .select(col("node").as("src"), col("node"), lit(0).as("dist"),
-        lit(1L).as("sigma"))
-      .localCheckpoint()
-    var frontier = state
-    val pairBound = {
-      val n = nodes.count()
-      if (n > 3000000L) Long.MaxValue else n * numPivots
-    }
-    graft.SparkConfs.maybeInterpreted(edges.sparkSession, pairBound) {
-      for (d <- 1 to maxDepth) {
-        val stepped = frontier.alias("f")
-          .join(und.alias("u"), col("f.node") === col("u.a"))
-          .select(col("f.src").as("src"), col("u.b").as("node"),
-            col("f.sigma").as("sigma"))
-        val fresh = stepped
-          .join(state.select("src", "node"), Seq("src", "node"), "left_anti")
-          .groupBy("src", "node")
-          .agg(sum("sigma").as("sigma"))
-          .select(col("src"), col("node"), lit(d).as("dist"), col("sigma"))
-          .localCheckpoint(eager = false)
-        state = state.unionAll(fresh).localCheckpoint(eager = false)
-        frontier = fresh
-      }
-      state = state.localCheckpoint()
-    }
-    val sp = state // (src ∈ pivots, node, dist, sigma)
-    val spRows = sp.count()
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (spRows < 2000000L) broadcast(df) else df
-    // (s, t) pairs restricted to pivots on BOTH ends: src always is a
-    // pivot; the semi-join pins node too. Spread the tiny stream side
-    // before the broadcast expansion (see betweenness — it would
-    // otherwise keep the BFS tail's coalesced 1-2 partitions and run
-    // the combination nearly single-threaded)
-    val st0 = sp.where(col("src") < col("node"))
-      .join(pivots, Seq("node"), "left_semi")
-      .select(col("src").as("s"), col("node").as("t"),
-        col("dist").as("dst"), col("sigma").as("sigst"))
-    val st = if (spRows < 2000000L)
-      st0.repartition(edges.sparkSession.sparkContext.defaultParallelism)
-    else st0
-    val sv = maybeBcast(sp.select(col("src").as("s"), col("node").as("v"),
-      col("dist").as("dsv"), col("sigma").as("sigsv")))
-    val tv = maybeBcast(sp.select(col("src").as("t"), col("node").as("v"),
-      col("dist").as("dtv"), col("sigma").as("sigtv")))
-    st.join(sv, "s")
-      .where(col("v") =!= col("s") && col("v") =!= col("t"))
-      .join(tv, Seq("t", "v"))
-      .where(col("dsv") + col("dtv") === col("dst"))
-      .select(col("v"),
-        expr("CAST(sigsv * sigtv * 1000000 DIV sigst AS BIGINT)").as("contrib"))
-      .groupBy("v").agg(sum("contrib").as("bc_q"))
-      .where(col("bc_q") > 0)
-      .select(col("v").as("node"), col("bc_q"))
+    val n = nodes.count()
+    val (sp, spRows) = sigmaBfs(und, pivots, maxDepth,
+      _ => if (n > 3000000L) Long.MaxValue else n * numPivots)
+    combinePairs(sp, spRows, Some(pivots))
   }
 
   /** Bounded synchronous k-core peeling over a canonical undirected
@@ -784,65 +700,13 @@ object LinkAnalysis {
     * graphs — the move phase of one Louvain level, not the full
     * multi-level pyramid).
     *
-    * Scale shape per round: one edge→assignment join + two map-side-
-    * combinable aggregations (k_{u,C}, totC) + a top-1-per-vertex via
-    * the bounded-heap [[graft.plans.TopKPerGroup]] (no window sort);
-    * assignment is checkpointed so lineage stays flat. Gain fits
-    * BIGINT while 4·m·d_max < 2⁶³ (route through DECIMAL beyond —
-    * ~10⁹ edges × 10⁹ max degree headroom).
+    * Runs [[louvainLocalMoveWeighted]] at w = 1, which keeps a self-loop
+    * (`a = b`) out of k_{u,C} where a count-based kernel would add it;
+    * every caller passes canonical `a < b` pairs, which have none.
     * Returns (id, community) for every vertex incident to an edge. */
-  def louvainLocalMove(pairs: DataFrame, rounds: Int = 4): DataFrame = {
-    require(rounds >= 1, s"louvainLocalMove: rounds >= 1, got $rounds")
-    val e = pairs.select("a", "b").localCheckpoint()
-    val sym = e.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint()
-    val mEdges = e.count()
-    // the assignment frame CARRIES the (static) degree, so each round
-    // reads (community, d, cur) off one join instead of three
-    val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
-    var assign = deg.select(col("u").as("id"), col("u").as("community"),
-      col("d")).localCheckpoint()
-    // Small-graph fast path (measured: the sf0.1 co-purchase projection
-    // is ~4k edges / 20k vertices — the rounds are pure scheduling
-    // overhead under AQE's per-exchange query-stage jobs): state is
-    // vertex-sized, so when V+E sit under the gate every assignment-
-    // side join can broadcast EXPLICITLY and the loop runs without
-    // adaptive re-planning. Big graphs keep the AQE path bit-for-bit.
-    val nV = assign.count()
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(e.sparkSession, nV + 2 * mEdges) {
-      for (_ <- 1 to rounds) {
-        val cand = sym
-          .join(bc(assign.select(col("id").as("v"), col("community").as("c"))),
-            "v")
-          .groupBy("u", "c").agg(count(lit(1)).as("kuc"))
-        val tot = assign.groupBy("community").agg(sum("d").as("tot"))
-        // the stay candidate rides along at kuc=0; MAX restores the real
-        // edge count where the vertex does have intra-community edges
-        val allc = cand
-          .unionByName(assign.select(col("id").as("u"),
-            col("community").as("c"), lit(0L).as("kuc")))
-          .groupBy("u", "c").agg(max("kuc").as("kuc"))
-        val gain = allc
-          .join(bc(assign.select(col("id").as("u"), col("community").as("cur"),
-            col("d"))), "u")
-          .filter(col("c") <= col("cur"))  // monotone labels: no oscillation
-          .join(bc(tot.select(col("community").as("c"), col("tot"))), "c")
-          .withColumn("g",
-            lit(2L * mEdges) * col("kuc") - col("d") *
-              (col("tot") - when(col("cur") === col("c"), col("d"))
-                .otherwise(lit(0L))))
-        assign = graft.plans.TopKPerGroup(
-            gain.select("u", "c", "g", "d"),
-            Seq("u"), Seq(("g", false), ("c", true)), 1)
-          .select(col("u").as("id"), col("c").as("community"), col("d"))
-          .localCheckpoint()
-      }
-    }
-    assign.select("id", "community")
-  }
+  def louvainLocalMove(pairs: DataFrame, rounds: Int = 4): DataFrame =
+    louvainLocalMoveWeighted(pairs.select(col("a"), col("b"), lit(1L).as("w")),
+      rounds)
 
   /** Weighted [[louvainLocalMove]] over a canonical edge list
     * `(a ≤ b, w)` where `a = b` rows are self-loops (the aggregated
@@ -850,12 +714,19 @@ object LinkAnalysis {
     * (`k_{u,C} = Σ w(u, v∈C, v≠u)`), degrees include 2×self-loop
     * weight, `m` is the total weight — self-loops move WITH their
     * vertex, so they cancel out of the argmax and correctly appear
-    * only in degrees/m. Same monotone-label determinism contract. */
+    * only in degrees/m. Same monotone-label determinism contract.
+    *
+    * Scale shape per round: one edge→assignment join + two map-side-
+    * combinable aggregations (k_{u,C}, totC) + a top-1-per-vertex via
+    * the bounded-heap [[graft.plans.TopKPerGroup]] (no window sort);
+    * assignment is checkpointed so lineage stays flat. Gain fits
+    * BIGINT while 4·m·d_max < 2⁶³ (route through DECIMAL beyond —
+    * ~10⁹ edges × 10⁹ max degree headroom). */
   def louvainLocalMoveWeighted(edges: DataFrame,
                                rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"louvainLocalMoveWeighted: rounds >= 1, got $rounds")
-    val e = edges.select(col("a"), col("b"), col("w").cast("long").as("w"))
-      .localCheckpoint()
+    val (e, mE) = graft.SparkConfs.checkpointCounted(
+      edges.select(col("a"), col("b"), col("w").cast("long").as("w")))
     val pair = e.filter(col("a") =!= col("b"))
     val self = e.filter(col("a") === col("b"))
       .select(col("a").as("u"), (col("w") * 2).as("sw"))
@@ -867,16 +738,24 @@ object LinkAnalysis {
     val deg = sym.select(col("u"), col("w").as("dw"))
       .unionByName(self.select(col("u"), col("sw").as("dw")))
       .groupBy("u").agg(sum("dw").as("d"))
-    // m = total edge weight (self-loops once) = Σd / 2
-    val mW = deg.agg(sum("d")).head().getLong(0) / 2L
-    // degree rides inside the assignment frame (the unweighted
-    // kernel's join-count trick)
+    // the assignment frame CARRIES the (static) degree, so each round
+    // reads (community, d, cur) off one join instead of three; its
+    // checkpoint also yields the vertex count and m = total edge weight
+    // (self-loops once) = Σd / 2
+    val obs = new org.apache.spark.sql.Observation()
     var assign = deg.select(col("u").as("id"), col("u").as("community"),
-      col("d")).localCheckpoint()
-    // same small-graph fast path as [[louvainLocalMove]]: explicit
-    // broadcasts + no per-exchange AQE stage jobs under the gate
-    val nV = assign.count()
-    val mE = e.count()
+        col("d"))
+      .observe(obs, count(lit(1)).as("n"),
+        coalesce(sum("d"), lit(0L)).as("dsum"))
+      .localCheckpoint()
+    val nV = obs.get("n").asInstanceOf[Long]
+    val mW = obs.get("dsum").asInstanceOf[Long] / 2L
+    // Small-graph fast path (measured: the sf0.1 co-purchase projection
+    // is ~4k edges / 20k vertices — the rounds are pure scheduling
+    // overhead under AQE's per-exchange query-stage jobs): state is
+    // vertex-sized, so when V+E sit under the gate every assignment-
+    // side join can broadcast EXPLICITLY and the loop runs without
+    // adaptive re-planning. Big graphs keep the AQE path bit-for-bit.
     val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     graft.SparkConfs.maybeSmallLoop(e.sparkSession, nV + 2 * mE) {
@@ -886,6 +765,8 @@ object LinkAnalysis {
             "v")
           .groupBy("u", "c").agg(sum("w").as("kuc"))
         val tot = assign.groupBy("community").agg(sum("d").as("tot"))
+        // the stay candidate rides along at kuc=0; MAX restores the real
+        // edge weight where the vertex does have intra-community edges
         val allc = cand
           .unionByName(assign.select(col("id").as("u"),
             col("community").as("c"), lit(0L).as("kuc")))
@@ -893,7 +774,7 @@ object LinkAnalysis {
         val gain = allc
           .join(bc(assign.select(col("id").as("u"), col("community").as("cur"),
             col("d"))), "u")
-          .filter(col("c") <= col("cur"))
+          .filter(col("c") <= col("cur"))  // monotone labels: no oscillation
           .join(bc(tot.select(col("community").as("c"), col("tot"))), "c")
           .withColumn("g",
             lit(2L * mW) * col("kuc") - col("d") *

@@ -315,14 +315,15 @@ object Traversals {
   }
 
   /** Small-star: per child u over its (already canonical) parent set
-    * P(u), hang u and every non-min parent on min(P(u)). */
+    * P(u), hang u and every non-min parent on min(P(u)). Both edges
+    * come out of one pass over the join, so `m` is broadcast once. */
   private def smallStarRound(e: DataFrame,
                              bc: DataFrame => DataFrame): DataFrame = {
     val m = e.groupBy("src").agg(min("dst").as("m"))
-    val withM = e.join(bc(m), Seq("src"))
-    withM.select(col("src"), col("m").as("dst"))
-      .unionAll(withM.filter(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst")))
+    e.join(bc(m), Seq("src"))
+      .select(explode(when(col("dst") =!= col("m"),
+          array(col("src"), col("dst"))).otherwise(array(col("src"))))
+        .as("src"), col("m").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
   }

@@ -334,14 +334,38 @@ class ExtSpec extends SparkSuite {
     val expected = UnionFind.minLabels(ids, pairs)
     assert(out.toSet == expected.map { case (id, c) => (id, c, id == c) }.toSet)
     assert(out.length == ids.size)
-    // measured 48 jobs, from the star-contraction kernel
-    // (Traversals.componentsLogRoundsPairs): 9 large-star rounds (a
-    // checkpoint and two broadcast jobs each) and 8 small-star rounds
-    // (a checkpoint and a broadcast), plus the two pair checkpoints,
-    // the forest's broadcast, the result checkpoint and the collect.
-    // Label propagation paid at least one checkpoint per chain hop.
+    // measured 40 jobs, from the star-contraction kernel
+    // (Traversals.componentsLogRoundsPairs): 9 large-star rounds and 8
+    // small-star rounds, each a broadcast of its per-node min table and
+    // a checkpoint; plus the raw pair checkpoint, the canonical pairs'
+    // distinct stage and checkpoint, the forest's broadcast, the result
+    // checkpoint and the collect. Label propagation paid at least one
+    // checkpoint per chain hop.
     assert(log.jobs.size <= 100,
       s"${log.jobs.size} jobs:\n${log.jobs.mkString("\n")}")
+  }
+
+  test("componentsLogRoundsPairs: four jobs per star-contraction round pair") {
+    val chain = scala.util.Random.shuffle(
+      (0L until 64L).map(i => (i, i + 1))).toDF("a", "b")
+    val (out, log) = JobLog(spark) {
+      graft.algos.Traversals.componentsLogRoundsPairs(chain)
+        .as[(Long, Long)].collect()
+    }
+    assert(out.toSet == (1L to 64L).map(_ -> 0L).toSet)
+    // checkpoints: the canonical pairs, then large/small-star rounds
+    // alternating until a large-star round finds a star forest
+    val checkpoints = log.actions.count(_ == "localCheckpoint")
+    assert(log.actions == Seq.fill(checkpoints)("localCheckpoint") :+ "collect")
+    val roundPairs = (checkpoints - 2) / 2
+    assert(roundPairs >= 2 && checkpoints == 2 * roundPairs + 2)
+    // per round pair: the large-star min-table broadcast and checkpoint,
+    // the small-star min-table broadcast and checkpoint. Once: the
+    // canonical pairs' distinct stage and checkpoint, the last
+    // large-star round's broadcast and checkpoint, the collect.
+    assert(log.jobs.size == 4 * roundPairs + 5,
+      s"${log.jobs.size} jobs for $roundPairs round pairs:\n" +
+        log.jobs.mkString("\n"))
   }
 
   test("sourceOverlap: identical sources jaccard 1, disjoint 0, estimator exact below capacity") {

@@ -181,6 +181,37 @@ class LinkAnalysisSpec extends SparkSuite {
     }
   }
 
+  test("harmonicCentrality/betweenness: job budget of the shared sigma BFS") {
+    val e = edges(randomEdges(61, 20, 30): _*)
+    for (depth <- Seq(2, 4)) {
+      val (_, hlog) = JobLog(spark) {
+        LinkAnalysis.harmonicCentrality(e, depth).collect()
+      }
+      val (_, blog) = JobLog(spark) {
+        LinkAnalysis.betweenness(e, depth).collect()
+      }
+      // checkpoints: the undirected projection, state 0 (its observed
+      // row count is the gate's n), two lazy ones per round, and the
+      // final state (its observed row count is the combination's
+      // broadcast gate) — no count job
+      val actions = Seq.fill(2 * depth + 3)("localCheckpoint") :+ "collect"
+      assert(hlog.actions == actions, hlog.actions)
+      assert(blog.actions == actions, blog.actions)
+      // jobs, both kernels: the projection's distinct stage and
+      // checkpoint, state 0's distinct stage and checkpoint, 4·depth − 2
+      // adaptive query stages of the rounds' joins, anti-joins and σ
+      // group-bys (run as each round's lazy checkpoint is planned), and
+      // the final state checkpoint. Then harmonic: the read-out's
+      // group-by stage and the collect; betweenness: the pair side's
+      // round-robin stage, the two broadcast σ sides, the bc_q group-by
+      // stage and the collect.
+      assert(hlog.jobs.size <= 4 * depth + 5,
+        s"${hlog.jobs.size} jobs:\n${hlog.jobs.mkString("\n")}")
+      assert(blog.jobs.size <= 4 * depth + 8,
+        s"${blog.jobs.size} jobs:\n${blog.jobs.mkString("\n")}")
+    }
+  }
+
   test("kmvCentrality with roomy k reproduces exact counts and sums") {
     // below k distinct reachables the KMV estimate IS the exact count,
     // so every column must agree with the exact operator on a graph of
@@ -865,6 +896,29 @@ class PipelineAnalyticsSpec extends SparkSuite {
     val p = LinkAnalysis.louvainLocalMove(path, rounds = 2)
       .as[(Long, Long)].collect().toMap
     assert(p == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+  }
+
+  test("louvainLocalMove: job budget") {
+    val rnd = new scala.util.Random(67)
+    val e = Seq.fill(60)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+      .collect { case (a, b) if a != b => (a min b, a max b) }.distinct
+      .toDF("a", "b")
+    for (rounds <- Seq(2, 4)) {
+      val (_, log) = JobLog(spark) {
+        LinkAnalysis.louvainLocalMove(e, rounds).collect()
+      }
+      // checkpoints: the edges (observed row count), the symmetrized
+      // edges, the assignment (observed vertex count and Σd), one per
+      // round — no count or sum job
+      assert(log.actions ==
+        Seq.fill(3 + rounds)("localCheckpoint") :+ "collect", log.actions)
+      // jobs: the edge checkpoint, the symmetrized checkpoint, the
+      // degree group-by's stage and the assignment checkpoint; per round
+      // the three broadcasts (the v-side and u-side assignment, the
+      // community totals) and the checkpoint; the collect
+      assert(log.jobs.size <= 4 * rounds + 5,
+        s"${log.jobs.size} jobs:\n${log.jobs.mkString("\n")}")
+    }
   }
 
   test("edgeStructureCard: hand-computed multiplicity/reciprocity/moments") {

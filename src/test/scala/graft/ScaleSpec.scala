@@ -724,4 +724,26 @@ class ScaleSpec extends SparkSuite {
     }
     assert(spark.conf.get(parts) == before)
   }
+
+  test("withoutConstraintPropagation: overlapping scopes restore the session value") {
+    val key = "spark.sql.constraintPropagation.enabled"
+    assert(spark.conf.get(key) == "true")
+    val aIn, bIn, aOut = new java.util.concurrent.CountDownLatch(1)
+    // bounded waits: a scope that throws must fail the test, not hang it
+    def await(l: java.util.concurrent.CountDownLatch): Unit =
+      assert(l.await(1, java.util.concurrent.TimeUnit.MINUTES))
+    def scope(body: => Unit): Thread = {
+      val t = new Thread(() =>
+        graft.SparkConfs.withoutConstraintPropagation(spark)(body))
+      t.start(); t
+    }
+    try {
+      // A enters, B enters, A exits while B still runs, then B exits
+      val a = scope { aIn.countDown(); await(bIn) }
+      await(aIn)
+      val b = scope { bIn.countDown(); await(aOut) }
+      a.join(); aOut.countDown(); b.join()
+      assert(spark.conf.get(key) == "true")
+    } finally spark.conf.unset(key)
+  }
 }
