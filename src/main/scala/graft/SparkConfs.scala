@@ -1,83 +1,58 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.SparkConf
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 
-/** Shared session tuning for the driver-contract mains (Bench /
-  * Verify / Profile): Kryo with GraphX's classes registered.
-  * GraphX kernels (Pregel/CC/SCC/PageRank) shuffle RDD records that
-  * Java serialization handles ~2x slower; without registration Kryo
-  * writes fully-qualified class names per record and forfeits much of
-  * that win. SQL/Tungsten paths are unaffected (UnsafeRow is already
-  * binary). */
+/** The small-loop gate of the iterative kernels, and the session conf
+  * scopes it is built from.
+  *
+  * Every round loop runs through [[rounds]], which makes the gate
+  * decision once, from row counts the kernel already measured: the
+  * vertex-sized state broadcasts (`rs.bc`) when `stateRows` sit under
+  * [[SmallLoopRows]], and the rounds run with AQE off and a handful of
+  * shuffle partitions ([[maybeSmallLoop]]) when the per-round
+  * `workRows` do. The scope implies the hint, because AQE's runtime
+  * broadcast conversion is off inside it. Each round's jobs carry
+  * `<kernel>/round <r>` as their job description, so a per-job listing
+  * (`tools.JobProfile`) names the kernel and round that spent the
+  * time. [[maybeSmallLoop]], [[maybeInterpreted]] and [[scopedConfs]]
+  * stay the primitives underneath. */
 object SparkConfs {
 
-  /** Rows below which an iterative operator's rounds run WITHOUT
-    * whole-stage codegen: every round's plan is structurally unique
-    * (fresh checkpoint RDD ids + round literals), so the codegen cache
-    * never hits and Janino compiles ~100ms of bytecode per stage per
-    * round — more than a small round's interpreted execution costs.
-    * Big inputs keep codegen (it amortizes over real data volume).
-    * Shared by the DataFrame BFS loops and the Lloyd rounds. */
+  /** Rows of per-round work below which an iterative operator's rounds
+    * run WITHOUT whole-stage codegen ([[maybeInterpreted]]). */
   val InterpretedRows = 20000000L
 
-  /** Rows below which an iterative kernel may take the SMALL-LOOP
-    * path: AQE off, a handful of shuffle partitions, and — the part
-    * that costs memory — EXPLICIT per-round `broadcast()` hints on its
-    * vertex-sized state tables. Deliberately much smaller than
-    * [[InterpretedRows]] (which was sized for the Janino-compile
-    * tradeoff, not broadcast memory): the gate is byte-derived, not a
-    * local[32] constant. State rows at every call site are ≤3 narrow
-    * (8-byte) columns, ≈64 B each as a built HashedRelation entry, so
-    * 4M rows ≈ 256 MB built — inside guide §3's "few hundred MB"
-    * broadcast comfort zone for an 8 GB driver and every executor
-    * that must hold the relation, an order of magnitude under the
-    * 8 GB / 512M-row hard cap, and safe to rebuild once per round.
-    * Above the bound, kernels keep the adaptive path: AQE's byte-based
-    * runtime broadcast conversion decides per join from MEASURED
-    * sizes, which is exactly what you want near the boundary. */
+  /** Rows below which an iterative kernel takes the SMALL-LOOP path
+    * ([[rounds]]). Byte-derived, not a local[32] constant: state rows
+    * at every call site are ≤3 narrow (8-byte) columns, ≈64 B each as
+    * a built HashedRelation entry, so 4M rows ≈ 256 MB built — inside
+    * guide §3's "few hundred MB" broadcast comfort zone for an 8 GB
+    * driver and every executor, and safe to rebuild once per round.
+    * Far below [[InterpretedRows]], which prices Janino compiles, not
+    * broadcast memory (r14 shipped 20M here, and a 19M-row ranks table
+    * was force-broadcast per iteration). Above the bound AQE's
+    * byte-based runtime broadcast conversion decides per join. */
   val SmallLoopRows = 4000000L
 
-  /** Run `body` (an iterative operator's actions) without whole-stage
-    * codegen when `rows` of per-round work sit under
-    * [[InterpretedRows]]: every round's plan is structurally unique
-    * (fresh checkpoint RDD ids + round literals), so the codegen cache
-    * never hits and Janino compiles ~100ms of bytecode per stage per
-    * round — more than a small round's interpreted execution costs.
-    * Big inputs keep codegen (it amortizes over real data volume).
-    *
-    * MEASURED NEGATIVE: also disabling AQE here looked like a 43% win
-    * on a cold-JVM scoped BFS subset (36.0s → 18.1s) but regressed the
-    * warm full bench 94s → 108s — AQE's per-round re-planning cost is
-    * driver CPU that JIT warms away, while the loops WITHOUT explicit
-    * broadcast hints (KMV centrality, pivot betweenness, Lloyd rounds)
-    * depend on AQE's runtime broadcast conversion and fell back to
-    * sort-merge without it (g37 ×2.5, g41 ×2.2, x22 ×1.6). Keep AQE
-    * on; only codegen is worth gating per-round.
-    *
-    * The conf flip is session-global for the duration — same
-    * single-threaded assumption the per-session graph caches make. */
-  /** Re-entrancy accounting for [[maybeInterpreted]]: concurrent
-    * gated scopes on one session (pqModel trains its m subspaces from
-    * a driver thread pool, each training gating itself) must not race
-    * the save/restore — only the scope that takes the depth 0→1 saves
-    * the previous value, and only the one returning it to 0 restores,
-    * so a nested or overlapping scope can never re-save the already-
-    * flipped "false" and strand the session. */
+  /** Depth-counted scoped conf flip shared by [[maybeInterpreted]],
+    * [[maybeSmallLoop]] and [[withoutConstraintPropagation]]: only the
+    * scope taking depth 0→1 saves the previous values and sets the
+    * overrides; only the one returning it to 0 restores — so
+    * concurrent or nested gated scopes on one session (pqModel's
+    * thread-pooled subspace trainings each gate themselves) can never
+    * re-save an already-flipped value and strand the session. The
+    * flip is session-global for the duration. */
   private val confScopes =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String),
-      (java.util.concurrent.atomic.AtomicInteger, Array[Map[String, String]])]
+    new ConcurrentHashMap[(SparkSession, String),
+      (AtomicInteger, Array[Map[String, String]])]
 
-  /** Depth-counted scoped conf flip shared by [[maybeInterpreted]] and
-    * [[maybeSmallLoop]]: only the scope taking depth 0→1 saves the
-    * previous values and sets the overrides; only the one returning it
-    * to 0 restores — so concurrent or nested gated scopes on one
-    * session (pqModel's thread-pooled subspace trainings each gate
-    * themselves) can never re-save an already-flipped value and strand
-    * the session. */
-  private[graft] def scopedConfs[A](spark: org.apache.spark.sql.SparkSession,
-                             tag: String, overrides: Map[String, String])
-                            (body: => A): A = {
+  private[graft] def scopedConfs[A](spark: SparkSession, tag: String,
+                                    overrides: Map[String, String])
+                                   (body: => A): A = {
     val key = (spark, tag)
     // Enter and exit run INSIDE ConcurrentHashMap.compute, which is
     // atomic per key: create+increment+save and decrement+restore are
@@ -86,8 +61,7 @@ object SparkConfs {
     // and no window where a removed-but-held entry races a fresh one.
     confScopes.compute(key, (_, v) => {
       val st = if (v != null) v
-        else (new java.util.concurrent.atomic.AtomicInteger(0),
-          Array[Map[String, String]](null))
+        else (new AtomicInteger(0), Array[Map[String, String]](null))
       if (st._1.getAndIncrement() == 0) {
         val saved = overrides.map { case (k, _) =>
           k -> spark.conf.get(k, null) }
@@ -113,58 +87,139 @@ object SparkConfs {
     })
   }
 
-  private def restore(spark: org.apache.spark.sql.SparkSession,
+  private def restore(spark: SparkSession,
                       saved: Map[String, String]): Unit = saved.foreach {
     case (k, null) => spark.conf.unset(k)
     case (k, v) => spark.conf.set(k, v)
   }
 
-  def maybeInterpreted[A](spark: org.apache.spark.sql.SparkSession,
-                          rows: Long)(body: => A): A =
+  /** Run `body` (an iterative operator's actions) without whole-stage
+    * codegen when `rows` of per-round work sit under
+    * [[InterpretedRows]]: every round's plan is structurally unique
+    * (fresh checkpoint RDD ids + round literals), so the codegen cache
+    * never hits and Janino compiles ~100ms of bytecode per stage per
+    * round — more than a small round's interpreted execution costs.
+    * Big inputs keep codegen (it amortizes over real data volume).
+    *
+    * MEASURED NEGATIVE: also disabling AQE here looked like a 43% win
+    * on a cold-JVM scoped BFS subset (36.0s → 18.1s) but regressed the
+    * warm full bench 94s → 108s — AQE's per-round re-planning cost is
+    * driver CPU that JIT warms away, while the loops WITHOUT explicit
+    * broadcast hints (KMV centrality, pivot betweenness, Lloyd rounds)
+    * depend on AQE's runtime broadcast conversion and fell back to
+    * sort-merge without it (g37 ×2.5, g41 ×2.2, x22 ×1.6). Keep AQE
+    * on; only codegen is worth gating per-round. */
+  def maybeInterpreted[A](spark: SparkSession, rows: Long)(body: => A): A =
     if (rows < 0 || rows >= InterpretedRows) body
     else scopedConfs(spark, "interp",
       Map("spark.sql.codegen.wholeStage" -> "false"))(body)
 
-  /** Run `body` (a bounded-round kernel over a MEASURED-small graph)
-    * with adaptive execution off and the shuffle-partition count
-    * dropped to a handful: AQE materializes every exchange as its own
-    * query-stage JOB (a driver sync point each), and 32-partition
-    * exchanges of a few-thousand-row state cost more scheduling than
-    * compute — a 4-round kernel over a ~4k-edge projection runs ~60
-    * jobs × tens of ms of pure overhead. Callers must pair this with
-    * EXPLICIT broadcast hints on their provably-small join sides
-    * (everything AQE's runtime broadcast conversion was providing),
-    * and must gate on a measured row bound so big inputs keep the
-    * adaptive path untouched — this is the scale-adaptive partitioning
-    * rule (fewer, right-sized partitions for small state; AQE for real
-    * data volume), not a local[32] constant.
-    *
-    * The bound is [[SmallLoopRows]], NOT [[InterpretedRows]]: the
-    * explicit broadcasts this path mandates are a per-round memory
-    * commitment the codegen bound was never sized for (r14 shipped
-    * the 20M-row bound here; a 19M-row ranks table is hundreds of MB
-    * force-broadcast per iteration where AQE's byte-based conversion
-    * would have declined). Callers gate their `bc()` hints on the
-    * same constant, but not always on the same row count as this
-    * scope (the hint on the broadcast side's rows, the scope on the
-    * per-round work), so the invariant is one-way: scope on implies
-    * hint on, while a hint may engage alone — with AQE still on —
-    * when the broadcast side is small and the round work is not. */
-  def maybeSmallLoop[A](spark: org.apache.spark.sql.SparkSession,
-                        rows: Long)(body: => A): A =
-    if (rows < 0 || rows >= SmallLoopRows) body
+  /** Run `body` with adaptive execution off and the shuffle-partition
+    * count dropped to a handful when `rows` sit under
+    * [[SmallLoopRows]]. Kernels enter it through [[rounds]], which
+    * pairs it with the broadcast hints AQE's runtime conversion was
+    * providing. */
+  def maybeSmallLoop[A](spark: SparkSession, rows: Long)(body: => A): A =
+    if (!underSmallLoop(rows)) body
     else scopedConfs(spark, "smallloop", Map(
       "spark.sql.adaptive.enabled" -> "false",
       // enough slots to keep skew harmless at the bound, few enough
       // that a tiny exchange isn't 32 near-empty tasks
       "spark.sql.shuffle.partitions" -> "4"))(body)
 
+  /** Whether a measured row count engages the small-loop gate
+    * (negative = unknown = no). */
+  private def underSmallLoop(rows: Long): Boolean =
+    rows >= 0 && rows < SmallLoopRows
+
+  /** `df` with a broadcast hint when its measured `rows` sit under
+    * [[SmallLoopRows]]: the hint half of the gate, for a one-off join
+    * outside any round loop. */
+  def broadcastUnder(df: DataFrame, rows: Long): DataFrame =
+    if (underSmallLoop(rows)) broadcast(df) else df
+
+  /** Whether two work sizes get the same small-loop and codegen gate
+    * decisions. When they do, concurrent gated scopes on one session
+    * flip the same confs, so their flips are re-entrant no-ops. */
+  def sameGates(a: Long, b: Long): Boolean =
+    underSmallLoop(a) == underSmallLoop(b) &&
+      (a < InterpretedRows) == (b < InterpretedRows)
+
+  /** Run an iterative kernel's rounds: THE small-loop gate decision,
+    * made once from row counts the kernel already measured (ride them
+    * on a checkpoint — [[checkpointCounted]], [[endpointRows]] — so
+    * the gate costs no job). `stateRows` bounds the vertex-sized
+    * tables the rounds join against and decides `rs.bc`'s broadcast
+    * hints (negative: no up-front bound); `workRows` bounds a round's scan and decides the
+    * [[maybeSmallLoop]] scope `body` runs in. The scope implies the
+    * hint ([[Rounds.hinted]]). A kernel whose rounds end in a lazy
+    * chain returns `rs.materialize(result)`. Why it pays: under AQE
+    * each exchange of a round is its own query-stage job, and the sf0.1
+    * co-purchase projection (~4k edges, 20k vertices) ran Louvain's
+    * rounds as pure scheduling overhead. */
+  def rounds[A](spark: SparkSession, kernel: String, stateRows: Long,
+                workRows: Long)(body: Rounds => A): A =
+    maybeSmallLoop(spark, workRows)(body(new Rounds(spark, kernel,
+      underSmallLoop(workRows) || underSmallLoop(stateRows),
+      underSmallLoop(workRows))))
+
+  /** The runner of an ungated kernel, which only tags the rounds: the
+    * form of the kernels whose plans AQE must keep choosing (k-core,
+    * k-truss, σ-BFS, KMV, SCC, force layout). */
+  def rounds(spark: SparkSession, kernel: String): Rounds =
+    new Rounds(spark, kernel, hinted = false, scoped = false)
+
+  /** One kernel's round runner (see [[rounds]]). `hinted`: the
+    * vertex-sized state broadcasts — its rows are under the bound, or
+    * the rounds run in the scope, where nothing else would broadcast
+    * it. */
+  final class Rounds private[SparkConfs] (spark: SparkSession, kernel: String,
+                                          val hinted: Boolean,
+                                          val scoped: Boolean) {
+    def bc(df: DataFrame): DataFrame = if (hinted) broadcast(df) else df
+
+    /** Rounds 1 to `n`. */
+    def upTo(n: Int)(round: Int => Unit): Unit = whileDo(_ < n)(round)
+
+    /** Rounds 1, 2, … while `more(rounds run so far)` holds. Round r
+      * runs with the job description `<kernel>/round r`, a
+      * SparkContext local property: thread-local (a thread started
+      * inside inherits it), and the caller's value — an outer kernel's
+      * round included — comes back after each round. Work a lazy
+      * round chain defers runs where it is materialized: in [[last]],
+      * or at the caller's action under the caller's description. */
+    def whileDo(more: Int => Boolean)(round: Int => Unit): Unit = {
+      var r = 0
+      while (more(r)) { r += 1; tagged(s"round $r")(round(r)) }
+    }
+
+    /** `body`, the kernel's work after its last round (the checkpoint
+      * that materializes a lazy round chain), with the job description
+      * `<kernel>/final`. */
+    def last[A](body: => A): A = tagged("final")(body)
+
+    /** A lazy round chain, materialized here (in [[last]]) when the
+      * rounds ran in the scope: returned lazily, it would compile at
+      * the caller's action, outside the scope's confs. */
+    def materialize(df: DataFrame): DataFrame =
+      if (scoped) last(df.localCheckpoint()) else df
+
+    private def tagged[A](what: String)(body: => A): A = {
+      val sc = spark.sparkContext
+      val caller = sc.getLocalProperty(JobDescription)
+      sc.setLocalProperty(JobDescription, s"$kernel/$what")
+      try body finally sc.setLocalProperty(JobDescription, caller)
+    }
+  }
+
+  private val JobDescription = "spark.job.description"
+
   /** Row count for a size gate: exact and free when `df` is a
     * projection of a LOADED in-memory cached table (Spark's cache
     * counted the rows while filling its batches), otherwise one
     * `count()` job. For gates only, never for answers — a cache block
     * that was evicted and rebuilt counts its rows again. */
-  def gateRows(df: org.apache.spark.sql.DataFrame): Long = {
+  def gateRows(df: DataFrame): Long = {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     def cached(p: LogicalPlan): Option[BigInt] = p match {
@@ -176,27 +231,24 @@ object SparkConfs {
     cached(df.queryExecution.optimizedPlan).map(_.toLong).getOrElse(df.count())
   }
 
-  /** `df.localCheckpoint()` and its row count from the same job: the
-    * count rides the checkpoint action as an `Observation` instead of
-    * a separate `count()` job. */
-  def checkpointCounted(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Long) = {
-    import org.apache.spark.sql.functions.{count, lit}
+  /** `df` eagerly checkpointed by `checkpoint` and its row count from
+    * the same job: the count rides the checkpoint action as an
+    * `Observation` instead of a separate `count()` job. */
+  def checkpointCounted(df: DataFrame, checkpoint: DataFrame => DataFrame =
+                          _.localCheckpoint()): (DataFrame, Long) = {
     val obs = new org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    val cp = checkpoint(df.observe(obs, count(lit(1)).as("n")))
     (cp, obs.get("n").asInstanceOf[Long])
   }
 
-  /** Whether the distinct endpoints of the pair list `pairs` (columns
-    * `a`, `b`, `rows` rows) number under [[SmallLoopRows]]. There are
-    * at most 2·rows of them, so below that bound the answer is yes
-    * with no job; above it one distinct count decides. */
-  def endpointsUnder(pairs: org.apache.spark.sql.DataFrame, a: String,
-                     b: String, rows: Long): Boolean = {
-    import org.apache.spark.sql.functions.col
-    2 * rows < SmallLoopRows || pairs.select(col(a).as("x"))
-      .unionAll(pairs.select(col(b).as("x"))).distinct().count() < SmallLoopRows
-  }
+  /** A gate's count of the distinct endpoints of the pair list `pairs`
+    * (columns `a`, `b`, `rows` rows). There are at most 2·rows of
+    * them, so below [[SmallLoopRows]] that bound stands in with no
+    * job; above it one distinct count gives the exact number. */
+  def endpointRows(pairs: DataFrame, a: String, b: String, rows: Long): Long =
+    if (2 * rows < SmallLoopRows) 2 * rows
+    else pairs.select(col(a).as("x"))
+      .unionAll(pairs.select(col(b).as("x"))).distinct().count()
 
   /** Run `body` with Catalyst constraint propagation off. The
     * self-referential union shape of iterative pair-state loops
@@ -209,11 +261,14 @@ object SparkConfs {
     * materializes inside this scope. Depth-counted like the other
     * [[scopedConfs]] flips, so overlapping scopes on one session
     * restore the session's own value once the last one exits. */
-  def withoutConstraintPropagation[A](spark: org.apache.spark.sql.SparkSession)
-                                     (body: => A): A =
+  def withoutConstraintPropagation[A](spark: SparkSession)(body: => A): A =
     scopedConfs(spark, "noconstraint",
       Map("spark.sql.constraintPropagation.enabled" -> "false"))(body)
 
+  /** Kryo with GraphX's classes registered, for the mains' sessions:
+    * GraphX kernels shuffle RDD records that Java serialization
+    * handles ~2x slower, and without registration Kryo writes
+    * fully-qualified class names per record. */
   def kryoGraphConf(): SparkConf = {
     val conf = new SparkConf()
       .set("spark.serializer", sys.env.getOrElse("SPARK_GRAFT_SERIALIZER",

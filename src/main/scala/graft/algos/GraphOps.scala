@@ -291,18 +291,12 @@ object GraphOps {
       "CAST((CAST(r AS DECIMAL(38,0)) * w) DIV wdeg AS BIGINT))")
     var ranks = vbase.select(col("vid"), col("wdeg"),
       (col("is_seed") * Scale).as("r"))
-    // small-graph fast path (see LinkAnalysis.louvainLocalMove): ranks
-    // and the gathered sums are vertex-sized — under the gate they
-    // broadcast and the rounds skip AQE's per-exchange stage jobs;
-    // big graphs keep the adaptive path
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(g.spark, nV + mE) {
-    for (_ <- 1 to iters) {
-      val gathered = e.join(bc(ranks.withColumnRenamed("vid", "src")), Seq("src"))
+    graft.SparkConfs.rounds(g.spark, "pageRankFixedPoint", nV, nV + mE) { rs =>
+    rs.upTo(iters) { _ =>
+      val gathered = e.join(rs.bc(ranks.withColumnRenamed("vid", "src")), Seq("src"))
         .groupBy(col("dst").as("vid"))
         .agg(sum(contrib.cast("decimal(38,0)")).as("s"))
-      ranks = vbase.join(bc(gathered), Seq("vid"), "left")
+      ranks = vbase.join(rs.bc(gathered), Seq("vid"), "left")
         .select(col("vid"), col("wdeg"),
           (col("is_seed") * lit(Scale * 15 / 100)
             + coalesce(expr("(85 * s) DIV 100"), lit(0L))).as("r"))
@@ -342,33 +336,26 @@ object GraphOps {
         col("nodeId").as("sid")), Seq("src"))
       .join(vl.select(col("vid").as("dst"), col("layer").as("tl"),
         col("nodeId").as("tid")), Seq("dst"))
-    val nbrs = e.groupBy(col("sl"), col("sid"))
-      .agg(sort_array(collect_list(struct(col("tl"), col("tid"))))
-        .as("nbrs"))
-      .localCheckpoint()
+    val (nbrs, nbrRows) = graft.SparkConfs.checkpointCounted(
+      e.groupBy(col("sl"), col("sid"))
+        .agg(sort_array(collect_list(struct(col("tl"), col("tid"))))
+          .as("nbrs")))
     val repsDf = spark.range(reps).select(col("id").cast("int").as("rep"))
-    var frontier = starts.select(col("layer"), col("nodeId"))
-      .crossJoin(repsDf)
-      .select(col("nodeId").as("start_id"), col("rep"),
-        lit(0).as("step"), col("layer"), col("nodeId").as("node_id"))
-      .localCheckpoint()
+    val (frontier0, frontierRows) = graft.SparkConfs.checkpointCounted(
+      starts.select(col("layer"), col("nodeId"))
+        .crossJoin(repsDf)
+        .select(col("nodeId").as("start_id"), col("rep"),
+          lit(0).as("step"), col("layer"), col("nodeId").as("node_id")))
+    var frontier = frontier0
     var out = frontier
-    // small-graph fast path (see pageRankFixedPoint): the frontier is
-    // walk-count-sized — broadcast it into the adjacency join
-    // explicitly under the gate (AQE's runtime conversion is off
-    // there) and skip AQE's per-round stage jobs; the adjacency table
-    // never shuffles either way
-    val nbrRows = nbrs.count()
-    val frontierRows = frontier.count()
-    val small = frontierRows < graft.SparkConfs.SmallLoopRows // broadcast side is the frontier
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(spark, nbrRows + frontierRows) {
-    for (t <- 1 to walkLen) {
+    graft.SparkConfs.rounds(spark, "deterministicWalks", frontierRows,
+        nbrRows + frontierRows) { rs =>
+    rs.upTo(walkLen) { t =>
       val h = pmod(
         conv(substring(md5(concat_ws(":", col("start_id"), col("rep"),
           lit(t))), 1, 15), 16, 10).cast("long"),
         size(col("nbrs")).cast("long")).cast("int") + 1
-      val f = bc(frontier)
+      val f = rs.bc(frontier)
       frontier = f
         .join(nbrs, f("layer") === nbrs("sl") &&
           f("node_id") === nbrs("sid"))
@@ -550,20 +537,17 @@ object GraphOps {
   def hitsFixedPoint(g: OnionGraph, iters: Int = 3): DataFrame = {
     import org.apache.spark.sql.functions._
     require(iters >= 1, s"hitsFixedPoint: iters >= 1, got $iters")
-    val e = g.edges.select("src", "dst").localCheckpoint()
-    val v = g.vertices.select("vid").localCheckpoint()
-    // small-graph fast path — see pageRankFixedPoint
-    val nV = v.count()
-    val mE = e.count()
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame =
-      if (small) org.apache.spark.sql.functions.broadcast(df) else df
+    val (e, mE) = graft.SparkConfs.checkpointCounted(g.edges.select("src", "dst"))
+    val (v, nV) = graft.SparkConfs.checkpointCounted(g.vertices.select("vid"))
+    var hub = v.select(col("vid"), lit(1000000L).as("x"))
+    var auth = hub
+    graft.SparkConfs.rounds(g.spark, "hitsFixedPoint", nV, nV + mE) { rs =>
     // one half-step: gather `from`'s score across edges keyed on
     // `joinKey`, grouped onto `gatherKey`, then max-normalize
     def halfStep(joinKey: String, gatherKey: String,
                  from: DataFrame): DataFrame = {
       val raw = v.join(
-        bc(e.join(bc(from.withColumnRenamed("vid", joinKey)), Seq(joinKey))
+        rs.bc(e.join(rs.bc(from.withColumnRenamed("vid", joinKey)), Seq(joinKey))
           .groupBy(col(gatherKey).as("vid"))
           .agg(sum(col("x").cast("decimal(38,0)")).as("s"))),
         Seq("vid"), "left")
@@ -576,10 +560,7 @@ object GraphOps {
           .otherwise(lit(0L)).as("x"))
         .localCheckpoint()
     }
-    var hub = v.select(col("vid"), lit(1000000L).as("x"))
-    var auth = hub
-    graft.SparkConfs.maybeSmallLoop(g.spark, nV + mE) {
-    for (_ <- 1 to iters) {
+    rs.upTo(iters) { _ =>
       auth = halfStep("src", "dst", hub)
       hub = halfStep("dst", "src", auth)
     }
@@ -619,21 +600,15 @@ object GraphOps {
     import org.apache.spark.sql.functions._
     require(iters >= 1, s"katzFixedPoint: iters >= 1, got $iters")
     require(alphaDen >= 2, s"katzFixedPoint: alphaDen >= 2, got $alphaDen")
-    val e = g.edges.select("src", "dst").localCheckpoint()
-    val v = g.vertices.select("vid").localCheckpoint()
+    val (e, mE) = graft.SparkConfs.checkpointCounted(g.edges.select("src", "dst"))
+    val (v, nV) = graft.SparkConfs.checkpointCounted(g.vertices.select("vid"))
     var x = v.select(col("vid"), lit(betaMicro).as("x"))
-    // small-graph fast path — see pageRankFixedPoint
-    val nV = v.count()
-    val mE = e.count()
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame =
-      if (small) org.apache.spark.sql.functions.broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(g.spark, nV + mE) {
-    for (_ <- 1 to iters) {
-      val gathered = e.join(bc(x.withColumnRenamed("vid", "src")), Seq("src"))
+    graft.SparkConfs.rounds(g.spark, "katzFixedPoint", nV, nV + mE) { rs =>
+    rs.upTo(iters) { _ =>
+      val gathered = e.join(rs.bc(x.withColumnRenamed("vid", "src")), Seq("src"))
         .groupBy(col("dst").as("vid"))
         .agg(sum(col("x").cast("decimal(38,0)")).as("s"))
-      x = v.join(bc(gathered), Seq("vid"), "left")
+      x = v.join(rs.bc(gathered), Seq("vid"), "left")
         .select(col("vid"),
           (lit(betaMicro)
             + coalesce(expr(s"CAST(s DIV $alphaDen AS BIGINT)"), lit(0L)))

@@ -204,7 +204,8 @@ object LinkAnalysis {
     var state = state0
     var frontier = state
     graft.SparkConfs.maybeInterpreted(und.sparkSession, gateBound(n)) {
-      for (d <- 1 to maxDepth) {
+      val rs = graft.SparkConfs.rounds(und.sparkSession, "sigmaBfs")
+      rs.upTo(maxDepth) { d =>
         val stepped = frontier.alias("f")
           .join(und.alias("u"), col("f.node") === col("u.a"))
           .select(col("f.src").as("src"), col("u.b").as("node"),
@@ -218,7 +219,7 @@ object LinkAnalysis {
         state = state.unionAll(fresh).localCheckpoint(eager = false)
         frontier = fresh
       }
-      graft.SparkConfs.checkpointCounted(state)
+      rs.last(graft.SparkConfs.checkpointCounted(state))
     }
   }
 
@@ -415,7 +416,7 @@ object LinkAnalysis {
     // work bound for the small-round codegen gate: V·k state + edges
     val stateBound = if (n > 300000000L) Long.MaxValue else n * k
     graft.SparkConfs.maybeInterpreted(edges.sparkSession, stateBound) {
-      for (t <- 1 to maxDepth) {
+      graft.SparkConfs.rounds(edges.sparkSession, "kmvBalls").upTo(maxDepth) { t =>
         val prop = state.alias("s")
           .join(und.alias("u"), col("s.node") === col("u.a"))
           .select(col("u.b").as("node"), col("s.h").as("h"))
@@ -505,8 +506,7 @@ object LinkAnalysis {
     * the corpus graph). */
   def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     var e = edges.select("a", "b")
-    val spark = edges.sparkSession
-    for (_ <- 1 to rounds) {
+    graft.SparkConfs.rounds(edges.sparkSession, "kcore").upTo(rounds) { _ =>
       val und = e.select(col("a").as("node"))
         .unionAll(e.select(col("b").as("node")))
       val keep = und.groupBy("node").agg(count(lit(1)).as("d"))
@@ -542,33 +542,30 @@ object LinkAnalysis {
   def labelSpread(edges: DataFrame, seeds: DataFrame,
                   rounds: Int): DataFrame = {
     require(rounds >= 0, "labelSpread: rounds >= 0")
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint()
+    val (und, mE) = graft.SparkConfs.checkpointCounted(
+      edges.select(col("a").as("u"), col("b").as("v"))
+        .unionAll(edges.select(col("b").as("u"), col("a").as("v"))))
     var labels = seeds.select(col("id"), col("label"), lit(0).as("round"))
       .localCheckpoint()
     var frontier = labels.select(col("id").as("u"), col("label"))
-    // small-graph fast path (see louvainLocalMove): frontier and the
-    // label table are VERTEX-sized, so the broadcast hint gates on the
-    // vertex count, not the edge count — at the sf1 decade (13.6M
-    // edges, 1.9M vertices) the ungated rounds fell to per-round
-    // sort-merge re-shuffles of the full edge table (checkpointed
-    // state has no stats and 30 MB labels exceed AQE's byte
-    // threshold): g56 ran ×13.6 the sf0.1 time. One distinct count on
-    // the checkpointed edge table, amortized over every round.
-    val mE = und.count()
-    val nV = und.select("u").distinct().count()
-    val small = nV < graft.SparkConfs.SmallLoopRows
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(edges.sparkSession, 2 * mE) {
-    for (t <- 1 to rounds) {
+    // frontier and the label table are VERTEX-sized, so the broadcast
+    // hint gates on the vertex count, not the edge count — at the sf1
+    // decade (13.6M edges, 1.9M vertices) the ungated rounds fell to
+    // per-round sort-merge re-shuffles of the full edge table
+    // (checkpointed state has no stats and 30 MB labels exceed AQE's
+    // byte threshold): g56 ran ×13.6 the sf0.1 time. `und` holds both
+    // directions of every edge, so its mE/2 pair rows bound the
+    // vertex count with no job below the bound.
+    val nV = graft.SparkConfs.endpointRows(und, "u", "v", mE / 2)
+    graft.SparkConfs.rounds(edges.sparkSession, "labelSpread", nV, 2 * mE) { rs =>
+    rs.upTo(rounds) { t =>
       // frontier-only neighbor counting IS all-labeled-neighbor
       // counting: a vertex still unlabeled at round t cannot neighbor
       // anything labeled before t-1 (it would have been labeled then)
-      val cand = und.join(bc(frontier.select(col("u"), col("label"))), Seq("u"))
+      val cand = und.join(rs.bc(frontier.select(col("u"), col("label"))), Seq("u"))
         .select(col("v").as("id"), col("label"))
       val newly = cand
-        .join(bc(labels.select("id")), Seq("id"), "left_anti")
+        .join(rs.bc(labels.select("id")), Seq("id"), "left_anti")
         .groupBy("id", "label").agg(count(lit(1)).as("n"))
         .groupBy("id")
         .agg(max(struct(col("n"), (-col("label")).as("nl"))).as("m"))
@@ -631,7 +628,7 @@ object LinkAnalysis {
   def ktruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, "ktruss: k >= 3, rounds >= 1")
     var e = edges.select("a", "b")
-    for (_ <- 1 to rounds) {
+    graft.SparkConfs.rounds(edges.sparkSession, "ktruss").upTo(rounds) { _ =>
       val und = e.select(col("a").as("u"), col("b").as("v"))
         .unionAll(e.select(col("b").as("u"), col("a").as("v")))
       e = e
@@ -750,18 +747,10 @@ object LinkAnalysis {
       .localCheckpoint()
     val nV = obs.get("n").asInstanceOf[Long]
     val mW = obs.get("dsum").asInstanceOf[Long] / 2L
-    // Small-graph fast path (measured: the sf0.1 co-purchase projection
-    // is ~4k edges / 20k vertices — the rounds are pure scheduling
-    // overhead under AQE's per-exchange query-stage jobs): state is
-    // vertex-sized, so when V+E sit under the gate every assignment-
-    // side join can broadcast EXPLICITLY and the loop runs without
-    // adaptive re-planning. Big graphs keep the AQE path bit-for-bit.
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(e.sparkSession, nV + 2 * mE) {
-      for (_ <- 1 to rounds) {
+    graft.SparkConfs.rounds(e.sparkSession, "louvainLocalMove", nV, nV + 2 * mE) { rs =>
+      rs.upTo(rounds) { _ =>
         val cand = sym
-          .join(bc(assign.select(col("id").as("v"), col("community").as("c"))),
+          .join(rs.bc(assign.select(col("id").as("v"), col("community").as("c"))),
             "v")
           .groupBy("u", "c").agg(sum("w").as("kuc"))
         val tot = assign.groupBy("community").agg(sum("d").as("tot"))
@@ -772,10 +761,10 @@ object LinkAnalysis {
             col("community").as("c"), lit(0L).as("kuc")))
           .groupBy("u", "c").agg(max("kuc").as("kuc"))
         val gain = allc
-          .join(bc(assign.select(col("id").as("u"), col("community").as("cur"),
+          .join(rs.bc(assign.select(col("id").as("u"), col("community").as("cur"),
             col("d"))), "u")
           .filter(col("c") <= col("cur"))  // monotone labels: no oscillation
-          .join(bc(tot.select(col("community").as("c"), col("tot"))), "c")
+          .join(rs.bc(tot.select(col("community").as("c"), col("tot"))), "c")
           .withColumn("g",
             lit(2L * mW) * col("kuc") - col("d") *
               (col("tot") - when(col("cur") === col("c"), col("d"))
@@ -898,42 +887,36 @@ object LinkAnalysis {
     * checkpointed (the kcore round pattern). */
   def lubyMis(pairs: DataFrame, rounds: Int = 6): DataFrame = {
     require(rounds >= 1, s"lubyMis: rounds >= 1, got $rounds")
-    val e = pairs.select("a", "b").filter(col("a") =!= col("b"))
-      .localCheckpoint()
+    val (e, mE) = graft.SparkConfs.checkpointCounted(
+      pairs.select("a", "b").filter(col("a") =!= col("b")))
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .unionByName(e.select(col("b").as("u"), col("a").as("v")))
       .localCheckpoint()
     def prio(c: Column): Column =
       conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
-    var st = sym.select(col("u").as("id")).distinct()
-      .withColumn("p", prio(col("id")))
-      .withColumn("status", lit(0)) // 0 undecided, 1 mis, 2 excluded
-      .localCheckpoint()
-    // small-graph fast path (see louvainLocalMove): every per-round
-    // side is vertex-sized, so under the gate they broadcast and the
-    // loop skips AQE's per-exchange stage jobs
-    val nV = st.count()
-    val mE = e.count()
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(e.sparkSession, nV + 2 * mE) {
-    for (_ <- 1 to rounds) {
+    val (st0, nV) = graft.SparkConfs.checkpointCounted(
+      sym.select(col("u").as("id")).distinct()
+        .withColumn("p", prio(col("id")))
+        .withColumn("status", lit(0))) // 0 undecided, 1 mis, 2 excluded
+    var st = st0
+    graft.SparkConfs.rounds(e.sparkSession, "lubyMis", nV, nV + 2 * mE) { rs =>
+    rs.upTo(rounds) { _ =>
       val und = st.filter(col("status") === 0)
       val nbrMin = sym
-        .join(bc(und.select(col("id").as("u"))), Seq("u"), "left_semi")
-        .join(bc(und.select(col("id").as("v"), col("p").as("vp"))), Seq("v"))
+        .join(rs.bc(und.select(col("id").as("u"))), Seq("u"), "left_semi")
+        .join(rs.bc(und.select(col("id").as("v"), col("p").as("vp"))), Seq("v"))
         .groupBy("u").agg(min("vp").as("mn"))
       val winners = und
-        .join(bc(nbrMin.select(col("u").as("id"), col("mn"))), Seq("id"), "left")
+        .join(rs.bc(nbrMin.select(col("u").as("id"), col("mn"))), Seq("id"), "left")
         .filter(col("mn").isNull || col("p") < col("mn"))
         .select("id")
       val excluded = sym
-        .join(bc(winners.select(col("id").as("u"))), Seq("u"), "left_semi")
+        .join(rs.bc(winners.select(col("id").as("u"))), Seq("u"), "left_semi")
         .select(col("v").as("id")).distinct()
-        .join(bc(und.select("id")), Seq("id"), "left_semi")
+        .join(rs.bc(und.select("id")), Seq("id"), "left_semi")
       st = st
-        .join(bc(winners.withColumn("__w", lit(true))), Seq("id"), "left")
-        .join(bc(excluded.withColumn("__x", lit(true))), Seq("id"), "left")
+        .join(rs.bc(winners.withColumn("__w", lit(true))), Seq("id"), "left")
+        .join(rs.bc(excluded.withColumn("__x", lit(true))), Seq("id"), "left")
         .withColumn("status",
           when(col("status") =!= 0, col("status"))
             .when(col("__w"), lit(1))
@@ -983,25 +966,21 @@ object LinkAnalysis {
     // sizeInBytes estimate would SQUARE per jump (see graftbridge)
     def ck(d: DataFrame): DataFrame =
       org.apache.spark.sql.graftbridge.statlessLocalCheckpoint(d)
-    val e = pairs.select("a", "b", "w").filter(col("a") < col("b"))
-      .transform(ck)
-    var comp = e.select(col("a").as("id"))
-      .unionByName(e.select(col("b").as("id"))).distinct()
-      .withColumn("c", col("id")).transform(ck)
+    val (e, mE) = graft.SparkConfs.checkpointCounted(
+      pairs.select("a", "b", "w").filter(col("a") < col("b")), ck)
+    val (comp0, nV) = graft.SparkConfs.checkpointCounted(
+      e.select(col("a").as("id"))
+        .unionByName(e.select(col("b").as("id"))).distinct()
+        .withColumn("c", col("id")), ck)
+    var comp = comp0
     var acc = e.select(col("a"), col("b"), col("w"), lit(0).as("round"))
       .where(lit(false))
-    // small-graph fast path (see louvainLocalMove): comp/best/ptr are
-    // all component-table-sized — broadcast them under the gate and
-    // run the jump chain without AQE's per-exchange stage jobs
-    val mE = e.count()
-    val nV = comp.count()
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, nV + 2 * mE) {
-    for (r <- 1 to rounds) {
+    graft.SparkConfs.rounds(pairs.sparkSession, "boruvkaForest", nV,
+        nV + 2 * mE) { rs =>
+    rs.upTo(rounds) { r =>
       val ce = e
-        .join(bc(comp.select(col("id").as("a"), col("c").as("ca"))), Seq("a"))
-        .join(bc(comp.select(col("id").as("b"), col("c").as("cb"))), Seq("b"))
+        .join(rs.bc(comp.select(col("id").as("a"), col("c").as("ca"))), Seq("a"))
+        .join(rs.bc(comp.select(col("id").as("b"), col("c").as("cb"))), Seq("b"))
         .where(col("ca") =!= col("cb"))
       val sym = ce.select(col("ca").as("u"), col("cb").as("v"), col("w"),
           col("a"), col("b"))
@@ -1018,7 +997,7 @@ object LinkAnalysis {
       // pointer graph: u -> its best partner; mutual pairs root at the
       // smaller id, then pointer-jump so chains <= 2^jumps collapse
       var ptr = best.as("x")
-        .join(bc(best.select(col("u").as("yu"), col("v").as("yv")).as("y")),
+        .join(rs.bc(best.select(col("u").as("yu"), col("v").as("yv")).as("y")),
           col("y.yu") === col("x.v") && col("y.yv") === col("x.u"), "left")
         .select(col("x.u").as("u"),
           when(col("y.yu").isNotNull, least(col("x.u"), col("x.v")))
@@ -1029,12 +1008,12 @@ object LinkAnalysis {
       ptr = ck(ptr)
       for (_ <- 1 to jumps) {
         ptr = ck(ptr
-          .join(bc(ptr.select(col("u").as("v"), col("v").as("vv"))),
+          .join(rs.bc(ptr.select(col("u").as("v"), col("v").as("vv"))),
             Seq("v"), "left")
           .select(col("u"), coalesce(col("vv"), col("v")).as("v")))
       }
       comp = comp
-        .join(bc(ptr.select(col("u").as("c"), col("v").as("nc"))), Seq("c"),
+        .join(rs.bc(ptr.select(col("u").as("c"), col("v").as("nc"))), Seq("c"),
           "left")
         .select(col("id"), coalesce(col("nc"), col("c")).as("c"))
         .transform(ck)
@@ -1109,13 +1088,9 @@ object LinkAnalysis {
     var live = live0
     var acc = live.select(col("a"), col("b"), lit(0).as("round"))
       .where(lit(false))
-    // small-graph fast path (see louvainLocalMove): best/matched are
-    // VERTEX-sized, live only shrinks — the broadcast hint gates on
-    // the endpoint count, the conf gate on per-round work
-    val small = graft.SparkConfs.endpointsUnder(live, "a", "b", mE)
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, 3 * mE) {
-    for (r <- 1 to rounds) {
+    graft.SparkConfs.rounds(pairs.sparkSession, "maximalMatching",
+        graft.SparkConfs.endpointRows(live, "a", "b", mE), 3 * mE) { rs =>
+    rs.upTo(rounds) { r =>
       val sym = live.select(col("a").as("u"), col("p"), col("a"), col("b"))
         .unionByName(live.select(col("b").as("u"), col("p"), col("a"),
           col("b")))
@@ -1123,10 +1098,10 @@ object LinkAnalysis {
         .agg(min(struct(col("p"), col("a"), col("b"))).as("m"))
         .select(col("u"), col("m.a").as("ma"), col("m.b").as("mb"))
       val win = live
-        .join(bc(best.select(col("u").as("a"), col("ma"), col("mb"))), Seq("a"))
+        .join(rs.bc(best.select(col("u").as("a"), col("ma"), col("mb"))), Seq("a"))
         .where(col("ma") === col("a") && col("mb") === col("b"))
         .drop("ma", "mb")
-        .join(bc(best.select(col("u").as("b"), col("ma"), col("mb"))), Seq("b"))
+        .join(rs.bc(best.select(col("u").as("b"), col("ma"), col("mb"))), Seq("b"))
         .where(col("ma") === col("a") && col("mb") === col("b"))
         .select(col("a"), col("b"))
         .localCheckpoint()
@@ -1134,8 +1109,8 @@ object LinkAnalysis {
       val matched = win.select(col("a").as("id"))
         .unionByName(win.select(col("b").as("id"))).distinct()
       live = live
-        .join(bc(matched.select(col("id").as("a"))), Seq("a"), "left_anti")
-        .join(bc(matched.select(col("id").as("b"))), Seq("b"), "left_anti")
+        .join(rs.bc(matched.select(col("id").as("a"))), Seq("a"), "left_anti")
+        .join(rs.bc(matched.select(col("id").as("b"))), Seq("b"), "left_anti")
         .select("a", "b", "p")
         .localCheckpoint()
     }
@@ -1172,37 +1147,31 @@ object LinkAnalysis {
     // ONCE: every round's per-vertex window (and the groupBy("u") after
     // it) then reuses the checkpointed HashPartitioning(u) instead of
     // re-exchanging the edge list per round — at any scale
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("u"))
-      .localCheckpoint()
-    var vals = und.groupBy(col("u").as("id"))
-      .agg(count(lit(1)).cast("long").as("val"))
-      .localCheckpoint()
+    val (und, mE) = graft.SparkConfs.checkpointCounted(
+      edges.select(col("a").as("u"), col("b").as("v"))
+        .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
+        .repartition(col("u")))
+    val (vals0, nV) = graft.SparkConfs.checkpointCounted(
+      und.groupBy(col("u").as("id"))
+        .agg(count(lit(1)).cast("long").as("val")))
+    var vals = vals0
     val w = Window.partitionBy("u").orderBy(col("nval").desc)
-    // small-graph fast path (see louvainLocalMove): the value table is
-    // vertex-sized — broadcast it into the adjacency join under the gate
-    val nV = vals.count()
-    val mE = und.count()
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(edges.sparkSession, nV + mE) {
-    for (_ <- 1 to rounds) {
+    vals = graft.SparkConfs.rounds(edges.sparkSession, "corenessHIndex", nV,
+        nV + mE) { rs =>
+    rs.upTo(rounds) { _ =>
       val h = und
-        .join(bc(vals.select(col("id").as("v"), col("val").as("nval"))),
+        .join(rs.bc(vals.select(col("id").as("v"), col("val").as("nval"))),
           Seq("v"))
         .withColumn("rn", row_number().over(w).cast("long"))
         .groupBy("u").agg(max(least(col("nval"), col("rn"))).as("h"))
       vals = vals
-        .join(bc(h.withColumnRenamed("u", "id")), Seq("id"), "left")
+        .join(rs.bc(h.withColumnRenamed("u", "id")), Seq("id"), "left")
         .select(col("id"),
           least(col("val"), coalesce(col("h"), lit(0L))).cast("long")
             .as("val"))
         .localCheckpoint(eager = false)
     }
-    // materialize INSIDE the gate when small: the lazy round chain
-    // otherwise compiles at the caller's action, outside this scope
-    if (small) vals = vals.localCheckpoint()
+    rs.materialize(vals)
     }
     vals.select(col("id"), col("val").as("coreness"))
   }

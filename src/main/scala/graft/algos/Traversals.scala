@@ -31,18 +31,14 @@ object Traversals {
 
   private val CheckpointEvery = 5
 
-  /** Frontier/label sets below this row count are broadcast into the
-    * per-round edge join. Checkpointed iteration state has no Catalyst
-    * stats, so without the hint every round sort-merge-joins — i.e.
-    * re-shuffles the FULL edge set once per round, which dominates
-    * traversal cost. We track exact row counts each round anyway (the
-    * convergence check), so the decision uses real numbers, not
-    * estimates; above the threshold the plain join keeps the 100 TB
-    * path safe (no driver OOM from broadcasting a giant label table). */
-  private val BroadcastRows = 1000000L
-
-  private def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
-    if (rows >= 0 && rows < BroadcastRows) broadcast(df) else df
+  /** Frontier/visited rows below which [[bfsFrom]] broadcasts them
+    * outside the small-loop scope. Checkpointed iteration state has no
+    * Catalyst stats, so without the hint every round sort-merge-joins,
+    * re-shuffling the FULL edge set once per round. Above this bound
+    * the plain join keeps a large traversal from broadcasting a giant
+    * visited table every round; it stays below the scope's 4M-row
+    * bound until a large-graph A/B shows the higher bound is safe. */
+  private val FrontierHintRows = 1000000L
 
   /** BFS hop distances from seed vertices, following src->dst
     * (downstream). Returns (vid, dist). Seeds get dist 0.
@@ -62,18 +58,15 @@ object Traversals {
     var (frontier, frontierRows) = seedState(seeds)
     var visited = frontier
     var visitedRows = frontierRows
-    var depth = 0
     var done = frontierRows == 0
-    // small-graph fast path (see GraphOps.pageRankFixedPoint): the
-    // frontier and visited tables already broadcast per round via
-    // maybeBroadcast; under the gate the rounds additionally skip
-    // AQE's per-exchange stage jobs and the frontier distinct()
-    // exchanges right-size to a handful of partitions. Gate rows =
-    // the per-round join's scan (edges + state); big graphs keep the
-    // adaptive path untouched.
-    graft.SparkConfs.maybeSmallLoop(edges.sparkSession, eRows + frontierRows) {
-    while (!done && (maxDist < 0 || depth < maxDist)) {
-      depth += 1
+    // no up-front state bound: frontier and visited are hinted by
+    // their live row counts each round, and at any size inside the
+    // scope, where AQE is off and nothing else would broadcast them
+    graft.SparkConfs.rounds(edges.sparkSession, "bfsFrom", stateRows = -1L,
+        workRows = eRows + frontierRows) { rs =>
+    def hint(df: DataFrame, rows: Long): DataFrame =
+      if (rs.scoped || rows < FrontierHintRows) broadcast(df) else df
+    rs.whileDo(r => !done && (maxDist < 0 || r < maxDist)) { depth =>
       // Broadcast the (small) frontier into the edge join and the
       // visited set into the anti-join: the edge table never moves.
       // Anti-join BEFORE distinct — the anti side is a map-side
@@ -84,10 +77,10 @@ object Traversals {
       val (next, nextRows) =
         graft.SparkConfs.maybeInterpreted(frontier.sparkSession, eRows + visitedRows) {
           graft.SparkConfs.checkpointCounted(
-            e.join(maybeBroadcast(frontier.select(col("vid").as("src")), frontierRows),
+            e.join(hint(frontier.select(col("vid").as("src")), frontierRows),
                 Seq("src"))
               .select(col("dst").as("vid"))
-              .join(maybeBroadcast(visited.select("vid"), visitedRows),
+              .join(hint(visited.select("vid"), visitedRows),
                 Seq("vid"), "left_anti")
               .distinct()
               .withColumn("dist", lit(depth)))
@@ -262,28 +255,23 @@ object Traversals {
         least(col("a"), col("b")).as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
     var e = pairs0
-    // small-graph fast path, REINSTATED at the r15 byte-derived bound
-    // (r14 shipped it at InterpretedRows=20M and the verdict flagged a
-    // g07/g57 regression on a contended host; the r15 quiet-host A/B
-    // could not reproduce it — g07 4.03 s with the gate vs 4.18 s
-    // without, g57 3.58 vs 3.26 — while REMOVING the gate measurably
-    // regressed the leiden refinement sweep that rides this kernel:
-    // g67 4.60→6.90 s, g68 7.23→8.64 s. Net: keep the gate, at the
-    // 4M-row SmallLoopRows bound)
-    // the broadcast side (the per-node min table) is VERTEX-sized —
-    // gate the hint on the endpoint count, the conf gate on per-round
-    // edge work
-    val small = graft.SparkConfs.endpointsUnder(e, "src", "dst", mE)
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, 2 * mE) {
+    // the gate, REINSTATED at the r15 byte-derived bound (r14 shipped
+    // it at InterpretedRows=20M and the verdict flagged a g07/g57
+    // regression on a contended host; the r15 quiet-host A/B could not
+    // reproduce it — g07 4.03 s with the gate vs 4.18 s without, g57
+    // 3.58 vs 3.26 — while REMOVING the gate measurably regressed the
+    // leiden refinement sweep that rides this kernel: g67 4.60→6.90 s,
+    // g68 7.23→8.64 s. Net: keep the gate, at the 4M-row bound)
+    graft.SparkConfs.rounds(pairs.sparkSession, "componentsLogRounds",
+        graft.SparkConfs.endpointRows(e, "src", "dst", mE), 2 * mE) { rs =>
     var converged = mE == 0L
-    while (!converged) {
+    rs.whileDo(_ => !converged) { _ =>
       val obs = new org.apache.spark.sql.Observation()
-      val e1 = largeStarRound(e, bc, obs).localCheckpoint()
+      val e1 = largeStarRound(e, rs.bc, obs).localCheckpoint()
       // a star forest is the fixpoint of both rounds: stop on it
       // before paying the small-star round
       if (obs.get("unstarred").asInstanceOf[Long] == 0L) converged = true
-      else e = smallStarRound(e1, bc).localCheckpoint()
+      else e = smallStarRound(e1, rs.bc).localCheckpoint()
     }
     }
     e.select(col("src").as("id"), col("dst").as("comp"))
@@ -380,7 +368,7 @@ object Traversals {
         .localCheckpoint()
     }
     graft.SparkConfs.maybeInterpreted(spark, eRows + nodeCount) {
-      while (nodeCount > 0) {
+      graft.SparkConfs.rounds(spark, "strongComponents").whileDo(_ => nodeCount > 0) { _ =>
         // ---- 1. trim trivial SCCs to fixpoint
         var trimming = true
         while (trimming && nodeCount > 0) {
@@ -509,31 +497,23 @@ object Traversals {
   def dagLevels(edges: DataFrame, vertices: DataFrame,
                 rounds: Int): DataFrame = {
     require(rounds >= 1, s"dagLevels: rounds >= 1, got $rounds")
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint()
-    var lvl = vertices.select(col("vid")).distinct()
-      .withColumn("level", lit(0L)).localCheckpoint()
-    // small-graph fast path (see LinkAnalysis.louvainLocalMove): the
-    // level table is vertex-sized — broadcast it under the gate
-    val mE = e.count()
-    val nV = lvl.count()
-    val small = nV < graft.SparkConfs.SmallLoopRows // broadcast side is vertex-sized
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(edges.sparkSession, nV + mE) {
-    for (_ <- 1 to rounds) {
-      val upd = e.join(bc(lvl.withColumnRenamed("vid", "src")), Seq("src"))
+    val (e, mE) = graft.SparkConfs.checkpointCounted(edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst")).distinct())
+    val (lvl0, nV) = graft.SparkConfs.checkpointCounted(
+      vertices.select(col("vid")).distinct().withColumn("level", lit(0L)))
+    graft.SparkConfs.rounds(edges.sparkSession, "dagLevels", nV, nV + mE) { rs =>
+    var lvl = lvl0
+    rs.upTo(rounds) { _ =>
+      val upd = e.join(rs.bc(lvl.withColumnRenamed("vid", "src")), Seq("src"))
         .groupBy(col("dst").as("vid"))
         .agg(max(col("level") + 1L).as("nl"))
-      lvl = lvl.join(bc(upd), Seq("vid"), "left")
+      lvl = lvl.join(rs.bc(upd), Seq("vid"), "left")
         .select(col("vid"),
           greatest(col("level"), coalesce(col("nl"), lit(0L))).as("level"))
         .localCheckpoint(eager = false)
     }
-    // materialize INSIDE the gate when small: the lazy round chain
-    // otherwise compiles at the caller's action, outside this scope
-    if (small) lvl = lvl.localCheckpoint()
+    rs.materialize(lvl)
     }
-    lvl
   }
 
   /** Reference-parity dual output (`visualisation.py:273-308` returns

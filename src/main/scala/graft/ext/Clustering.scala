@@ -110,7 +110,7 @@ object Clustering {
   private[ext] def kmeansModelOnQuant(quant0: DataFrame, seedIds: DataFrame,
                                       iters: Int, riders: Seq[String] = Nil)
       : (DataFrame, DataFrame) = {
-    val quant = quant0.localCheckpoint()
+    val (quant, quantRows) = graft.SparkConfs.checkpointCounted(quant0)
     var centroids = quant.join(broadcast(seedIds), Seq("vec_id"))
       .select(col("cluster"), col("dim"), col("q").as("cq"))
       .localCheckpoint()
@@ -134,17 +134,11 @@ object Clustering {
     // Codegen gate (see SparkConfs.InterpretedRows): each Lloyd
     // round's plan is unique, so small trainings pay Janino compile
     // time per stage per round for nothing — run them interpreted.
-    // The count is cheap on the checkpointed quantized RDD.
-    val quantRows = quant.count()
-    // under the small gate the assignment side of the centroid update
-    // must broadcast EXPLICITLY (AQE's runtime conversion is off there)
-    val small = quantRows >= 0 && quantRows < graft.SparkConfs.SmallLoopRows
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    graft.SparkConfs.maybeSmallLoop(quant.sparkSession, quantRows) {
+    graft.SparkConfs.rounds(quant.sparkSession, "kmeansModel", quantRows, quantRows) { rs =>
     graft.SparkConfs.maybeInterpreted(quant.sparkSession, quantRows) {
-      for (_ <- 1 to iters) {
+      rs.upTo(iters) { _ =>
         val a = assign(centroids)
-        centroids = quant.join(bc(a.select("vec_id", "cluster")), Seq("vec_id"))
+        centroids = quant.join(rs.bc(a.select("vec_id", "cluster")), Seq("vec_id"))
           .groupBy("cluster", "dim")
           // decimal sum: exact at any cluster size (BIGINT would wrap
           // at ~9e12 members of 1e6-scale components)
@@ -152,12 +146,7 @@ object Clustering {
           .select(col("cluster"), col("dim"), floorDiv(col("s"), col("n")).as("cq"))
           .localCheckpoint()
       }
-      // materialize the final assignment inside the gate when small —
-      // returned lazily, it would otherwise compile under the caller
-      val a =
-        if (small) assign(centroids).localCheckpoint()
-        else assign(centroids)
-      (a, centroids)
+      (rs.materialize(assign(centroids)), centroids)
     }
     }
   }
@@ -510,8 +499,6 @@ object Clustering {
         // partitions) would bleed into the ungated model's
         // corpus-sized shuffles running on the same session. Gates
         // agreeing makes the flips re-entrant no-ops instead.
-        def gates(rows: Long) = (rows < graft.SparkConfs.SmallLoopRows,
-          rows < graft.SparkConfs.InterpretedRows)
         val nQuant = emb.count() * dims
         def train(which: Int): (DataFrame, DataFrame) = which match {
           case 0 =>
@@ -521,7 +508,7 @@ object Clustering {
             (cd, cb)
         }
         val both =
-          if (gates(nQuant) == gates(nQuant / m))
+          if (graft.SparkConfs.sameGates(nQuant, nQuant / m))
             concurrently(emb.sparkSession, 2, -1L)(train)
           else Seq(train(0), train(1))
         (both(0)._1, both(0)._2,
@@ -1394,7 +1381,7 @@ object Clustering {
     val quant = quantize(emb, idCol, vecCol).localCheckpoint()
     val first = quant.agg(min("vec_id")).head().getLong(0)
     var seeds = Vector((first, 1, 0L)) // (vec_id, seed_rank, min_d2)
-    for (step <- 2 to k) {
+    graft.SparkConfs.rounds(spark, "kcenterSeeds").upTo(k - 1) { r =>
       val sel = quant.where(col("vec_id")
           .isin(seeds.map(_._1): _*))
         .select(col("vec_id").as("sel_id"), col("dim"),
@@ -1409,7 +1396,7 @@ object Clustering {
         .orderBy(col("min_d2").desc, col("vec_id"))
         .limit(1)
         .as[(Long, Long)].head()
-      seeds = seeds :+ ((next._1, step, next._2))
+      seeds = seeds :+ ((next._1, r + 1, next._2))
     }
     seeds.toDF("vec_id", "seed_rank", "min_d2")
   }

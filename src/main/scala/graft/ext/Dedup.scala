@@ -958,12 +958,12 @@ object Dedup {
       pairs.select(col("a"), col("b")))
     val forest = graft.algos.Traversals.componentsLogRoundsPairs(raw)
       .select(col("id").as("doc_id"), col("comp"))
-    // the kernel's own gates: 2·rows bounds the endpoint count
-    val small = 2 * rows < graft.SparkConfs.SmallLoopRows
-    val cl = graft.SparkConfs.maybeSmallLoop(pairs.sparkSession, 2 * rows) {
+    // the kernel's own gate: 2·rows bounds the endpoint count
+    val cl = graft.SparkConfs.rounds(pairs.sparkSession, "nearDupClusters",
+        2 * rows, 2 * rows) { rs =>
       raw.select(col("a").as("doc_id"))
         .unionAll(raw.select(col("b").as("doc_id"))).distinct()
-        .join(if (small) broadcast(forest) else forest, Seq("doc_id"), "left")
+        .join(rs.bc(forest), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("cluster"))
         .localCheckpoint()
     }

@@ -523,8 +523,7 @@ object Similarity {
     // small gate (the corpus row count bounds its rows), else this
     // join plans as a sort-merge
     emb.select(col(idCol).as("vec_id"))
-      .join(if (n < graft.SparkConfs.SmallLoopRows) broadcast(cl) else cl,
-        Seq("vec_id"), "left")
+      .join(graft.SparkConfs.broadcastUnder(cl, n), Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
   }

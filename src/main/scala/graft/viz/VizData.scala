@@ -191,7 +191,7 @@ object VizData {
     // sign(num) * (|num| DIV den) with den > 0
     def tdiv(num: String, den: String): String =
       s"CASE WHEN $num >= 0 THEN ($num) DIV ($den) ELSE -((-($num)) DIV ($den)) END"
-    for (k <- 1 to iters) {
+    graft.SparkConfs.rounds(edges.sparkSession, "forceLayout").upTo(iters) { k =>
       val t = temp0 / k
       val pj = pos.select(col("node").as("nj"), col("x").as("xj"),
         col("y").as("yj"))
@@ -278,7 +278,7 @@ object VizData {
     val offsets = broadcast(spark.createDataFrame(
       (-1 to 1).flatMap(ox => (-1 to 1).map(oy => (ox.toLong, oy.toLong)))
     ).toDF("ox", "oy"))
-    for (k <- 1 to iters) {
+    graft.SparkConfs.rounds(spark, "forceLayoutBinned").upTo(iters) { k =>
       val t = temp0 / k
       val binned = pos
         .withColumn("cx", expr(s"x DIV $cell"))

@@ -13,9 +13,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object JobLog {
   /** A job named by its final stage's call site; `sql` says whether it
     * ran inside a SQL execution (a footer-inference schema job does
-    * not). Jobs that adaptive execution submits from its own threads
-    * carry no useful call site, so specs count actions by name. */
-  final case class Job(name: String, sql: Boolean) {
+    * not), `desc` is its `spark.job.description` (null when unset —
+    * a kernel round sets `<kernel>/round <r>`). Jobs that adaptive
+    * execution submits from its own threads carry no useful call
+    * site, so specs count actions by name. */
+  final case class Job(name: String, sql: Boolean, desc: String = null) {
     /** The job Spark runs to read parquet footers while a DataFrame is
       * created. */
     def schemaJob: Boolean = !sql && name.startsWith("parquet at ")
@@ -31,9 +33,10 @@ object JobLog {
     val writeTasks = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val sql = Option(e.properties)
-          .exists(_.getProperty("spark.sql.execution.id") != null)
-        jobs.add(Job(e.stageInfos.maxBy(_.stageId).name, sql))
+        val props = Option(e.properties)
+        jobs.add(Job(e.stageInfos.maxBy(_.stageId).name,
+          props.exists(_.getProperty("spark.sql.execution.id") != null),
+          props.map(_.getProperty("spark.job.description")).orNull))
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null &&

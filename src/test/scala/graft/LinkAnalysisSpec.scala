@@ -750,6 +750,91 @@ class PipelineAnalyticsSpec extends SparkSuite {
     assert(again.toSet == got.toSet)
   }
 
+  test("lubyMis: job budget — the gate's row counts ride the checkpoints") {
+    val edges = (0L until 30L).flatMap(i =>
+      Seq((i, (i + 1) % 30), (i, (i + 3) % 30)))
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+      .toDF("a", "b")
+    val rounds = 3
+    val (_, log) = JobLog(spark) {
+      LinkAnalysis.lubyMis(edges, rounds).collect()
+    }
+    // checkpoints: the edges (observed edge count), the symmetrized
+    // edges, the state (observed vertex count), one per round — no
+    // count job
+    assert(log.actions ==
+      Seq.fill(3 + rounds)("localCheckpoint") :+ "collect", log.actions)
+    // the actions above are the pin; the job count gets one job of
+    // headroom over today's 8·rounds + 5 — the three checkpoints and
+    // the state's distinct (its shuffle stage, before the small-loop
+    // scope turns AQE off); per round the seven broadcasts (the
+    // undecided ids, their priorities, the neighbor minima, the
+    // winners twice, the undecided ids again, the exclusions) and the
+    // state checkpoint; the collect
+    assert(log.jobs.size <= 8 * rounds + 6,
+      s"${log.jobs.size} jobs:\n${log.jobs.mkString("\n")}")
+  }
+
+  test("rounds: every job of round r carries <kernel>/round r, nested " +
+      "pointer jumps included, and the caller's description comes back") {
+    val edges = (0L until 30L).flatMap(i =>
+      Seq((i, (i + 1) % 30), (i, (i + 3) % 30)))
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+      .map { case (a, b) => (a, b, (a * 7 + b * 3) % 5 + 1) }
+      .toDF("a", "b", "w")
+    val (rounds, jumps) = (2, 3)
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (_, log) = JobLog(spark) {
+        val forest = LinkAnalysis.boruvkaForest(edges, rounds, jumps)
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        forest.collect()
+      }
+      val tags = (1 to rounds).map(r => s"boruvkaForest/round $r")
+      // each job's round, 0 for the caller's jobs (the checkpoints
+      // before round 1 and the collect)
+      val round = log.jobs.map { j =>
+        assert(j.desc == "caller" || tags.contains(j.desc), j)
+        tags.indexOf(j.desc) + 1
+      }
+      val inside = round.dropWhile(_ == 0).reverse.dropWhile(_ == 0).reverse
+      // the rounds run in order, each one contiguous block of jobs
+      assert(inside.distinct == (1 to rounds) && inside == inside.sorted,
+        log.jobs.mkString("\n"))
+      // a round's block holds its nested pointer jumps: the best-edge,
+      // pointer and component checkpoints plus one per jump
+      for (r <- 1 to rounds) assert(inside.count(_ == r) >= jumps + 3)
+      assert(round.head == 0 && round.last == 0)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("rounds: a lazy round chain's deferred jobs carry <kernel>/final") {
+    import graft.algos.Traversals
+    val es = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    val vs = (0L to 12L).toDF("vid")
+    val rounds = 3
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (_, log) = JobLog(spark) {
+        Traversals.dagLevels(es, vs, rounds).collect()
+      }
+      val order = "caller" +: (1 to rounds).map(r => s"dagLevels/round $r") :+
+        "dagLevels/final"
+      val at = log.jobs.map(j => order.indexOf(j.desc))
+      assert(!at.contains(-1), log.jobs.mkString("\n"))
+      // the caller's input checkpoints, then the rounds' broadcasts,
+      // then the checkpoint that runs the deferred chain, then the
+      // caller's collect
+      val inside = at.dropWhile(_ == 0).reverse.dropWhile(_ == 0).reverse
+      assert(inside == inside.sorted && inside.last == order.size - 1,
+        log.jobs.mkString("\n"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+  }
+
   test("weightedBernoulli is deterministic and monotone in weight") {
     import graft.ext.Sampling
     val df = (0L until 500L).toDF("doc_id")

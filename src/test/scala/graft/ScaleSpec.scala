@@ -708,6 +708,29 @@ class ScaleSpec extends SparkSuite {
       graft.SparkConfs.InterpretedRows)
   }
 
+  test("rounds: wherever the scope engages, the hint engages") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val df = spark.range(3).toDF("id")
+    def hinted(d: org.apache.spark.sql.DataFrame): Boolean =
+      d.queryExecution.analyzed match {
+        case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+        case _ => false
+      }
+    val bound = graft.SparkConfs.SmallLoopRows
+    def under(rows: Long) = rows >= 0 && rows < bound
+    val sizes = Seq(-1L, 0L, bound - 1, bound, Long.MaxValue)
+    for (state <- sizes; work <- sizes)
+      graft.SparkConfs.rounds(spark, "probe", state, work) { rs =>
+        assert(rs.scoped == under(work), (state, work))
+        assert(rs.scoped ==
+          (spark.conf.get("spark.sql.adaptive.enabled") == "false"))
+        assert(rs.hinted == (rs.scoped || under(state)), (state, work))
+        assert(hinted(rs.bc(df)) == rs.hinted)
+      }
+    val tagOnly = graft.SparkConfs.rounds(spark, "probe")
+    assert(!tagOnly.scoped && !hinted(tagOnly.bc(df)))
+  }
+
   test("scopedConfs: a conf that refuses to set rolls the whole scope back") {
     val parts = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(parts)
